@@ -19,11 +19,18 @@ import graft.tables.{AppendState, DeltaState, SnapshotStore}
  * State is INCREMENTAL (tables.DeltaState / AppendState): each table is an
  * immutable base + replace-by-key overlay + per-round insert deltas, so a
  * round materializes only its own changes — O(fetched + discovered), never
- * O(frontier). All of a round's deltas are persisted and materialized by
- * ONE Spark job (a tagged union counted per part); with the fetch job
- * inside CrawlRound, a non-empty round costs 2 substantive jobs + a small
- * bloom-build over cached new keys, instead of round-1's ~10 jobs and
- * whole-table rewrites.
+ * O(frontier). All of a round's deltas are leafed and materialized by ONE
+ * counting job. That is not a round's whole cost: with AQE every exchange
+ * and broadcast under a leaf runs as its own job when the leaf is built,
+ * so the recrawl benchmark (1,000-host Zipf web, local[4]) measures 23.6
+ * Spark jobs and 63 tasks a round (27.6 and 226 before the round's
+ * generated code was made reusable and its leaves counted over row RDDs).
+ *
+ * Generated code is reused across rounds: per-round values reach it as
+ * data (see CrawlRound), and the driver sets
+ * `spark.sql.codegen.useIdInClassName=false` on its session unless the
+ * caller has set it, because whole-stage class names otherwise carry
+ * stage ids that shift every round.
  *
  * Time is the same logical clock as the simulator: round r of a `run(t0,_)`
  * executes at now = t0 + r (one round ≙ one reference wall-second).
@@ -44,6 +51,10 @@ final class CrawlDriver(
     robotsTtl: Long = 86400L) {
 
   import spark.implicits._
+
+  // see the class doc: stage ids in class names defeat codegen reuse
+  if (!spark.conf.getAll.contains(CrawlDriver.UseIdInClassName))
+    spark.conf.set(CrawlDriver.UseIdInClassName, "false")
 
   // -------------------------------------------------------- table state
   private val fState = new DeltaState[FrontierEntry](spark, "url_hash")
@@ -332,21 +343,24 @@ final class CrawlDriver(
             import scala.concurrent.{Await, Future}
             import scala.concurrent.duration.Duration
             implicit val ec: scala.concurrent.ExecutionContext = leafEc
-            // The store-visible update deltas double as the overlay-compose
-            // inputs: ONE checkpointed copy each (leafing them twice stored
-            // and materialized every update delta twice per round); without
-            // a store the overlays compose straight from the raw plans.
-            // All leafs finalize CONCURRENTLY on leafEc (see its doc);
-            // each overlay chains after its own update delta's handle.
-            val fuF = Future { if (withStore) leaf(res.updatedFrontier)
-                               else res.updatedFrontier }
-            val huF = Future { if (withStore) leaf(res.updatedHosts)
-                               else res.updatedHosts }
-            val luF = Future { if (withStore) leaf(res.logUpdates)
-                               else res.logUpdates }
-            val foF = fuF.map(fu => leaf(fState.composeOverlay(fu)))
-            val hoF = huF.map(hu => leaf(hState.composeOverlay(hu)))
-            val loF = luF.map(lu => leaf(lState.composeOverlay(lu)))
+            // The update deltas are leafed before they compose into the
+            // overlays (and double as the store-visible deltas): the
+            // overlay's key scan then runs the same generated class as
+            // every other key scan of a leaf of that table, where a raw
+            // plan would compile its own. All leafs finalize CONCURRENTLY
+            // on leafEc (see its doc); each overlay chains after its own
+            // update delta's handle.
+            val fuF = Future { leaf(res.updatedFrontier) }
+            val huF = Future { leaf(res.updatedHosts) }
+            val luF = Future { leaf(res.logUpdates) }
+            // an empty overlay composes to the update leaf itself
+            def overlay[T](st: DeltaState[T], u: Dataset[T]): Dataset[T] = {
+              val o = st.composeOverlay(u)
+              if (o eq u) u else leaf(o)
+            }
+            val foF = fuF.map(overlay(fState, _))
+            val hoF = huF.map(overlay(hState, _))
+            val loF = luF.map(overlay(lState, _))
             val fnF  = Future { leaf(res.newFrontier) }
             val hnF  = Future { leaf(res.newHosts) }
             val liF  = Future { leaf(res.logInserts) }
@@ -367,27 +381,28 @@ final class CrawlDriver(
             (get(fuF), get(huF), get(luF), get(foF), get(hoF), get(loF),
               get(fnF), get(hnF), get(liF), get(pgF), get(extF), get(trF))
           }
-        // Bucket tags ride the SAME counting job when a store needs
-        // changed-bucket sets (zero extra jobs); without a store they
-        // collapse to a constant so e.g. the sha2 in urlBucketCol never
-        // runs in the bench hot path.
-        def tag(c: => Column): Column = if (withStore) c else lit(0)
+        // With a store, bucket tags ride the SAME counting job (zero extra
+        // jobs for the changed-bucket sets); without one, the leaves are
+        // counted over their row RDDs, which compiles no scan classes.
         val parts: Seq[(String, DataFrame, Column)] = Seq(
-          ("fn", fn.toDF(), tag(frontierBucketCol)),
-          ("hn", hn.toDF(), tag(hostBucketCol)),
-          ("li", li.toDF(), tag(keyBucketCol)),
-          ("pg", pg.toDF(), tag(keyBucketCol)),
-          ("ext", ext.toDF(), tag(urlBucketCol)),
+          ("fn", fn.toDF(), frontierBucketCol),
+          ("hn", hn.toDF(), hostBucketCol),
+          ("li", li.toDF(), keyBucketCol),
+          ("pg", pg.toDF(), keyBucketCol),
+          ("ext", ext.toDF(), urlBucketCol),
           ("tr", tr.toDF(), lit(0)),
           ("fo", fo.toDF(), lit(0)), ("ho", ho.toDF(), lit(0)),
           ("lo", lo.toDF(), lit(0))) ++
           (if (withStore) Seq(
-            ("fu", fu.toDF(), tag(frontierBucketCol)),
-            ("hu", hu.toDF(), tag(hostBucketCol)),
-            ("lu", lu.toDF(), tag(keyBucketCol))) else Nil)
+            ("fu", fu.toDF(), frontierBucketCol),
+            ("hu", hu.toDF(), hostBucketCol),
+            ("lu", lu.toDF(), keyBucketCol)) else Nil)
         if (verbose) println(f"[round-timing]   (leafs: $leafSec%.2fs)")
         val ((counts, buckets), matSec) = timed("materialize+count") {
-          materializeAndCount(parts)
+          if (withStore) materializeAndCount(parts)
+          else (parts.map(_._1).zip(
+              graft.tables.StateLeaf.countRows(parts.map(_._2))).toMap,
+            Map.empty[String, Set[Int]])
         }
         val (_, bloomSec) = timed("bloom") {
           mergeBloomFrom(fn.select("url_hash").as[String], counts("fn"))
@@ -395,11 +410,11 @@ final class CrawlDriver(
         workPhaseSec += matSec + bloomSec
 
         // Size each retained part's task count from its ACTUAL rows (a
-        // post-materialization coalesce is a narrow, zero-copy view): a
-        // 2k-row late-round delta must not cost 64 scheduler tasks on
-        // every later scan of the accumulated parts.
+        // post-materialization coalesce is a narrow, zero-copy view that
+        // stays a leaf): a 2k-row late-round delta must not cost 64
+        // scheduler tasks on every later scan of the accumulated parts.
         def sized[T](ds: Dataset[T], rows: Long): Dataset[T] =
-          ds.coalesce(math.max(1L,
+          org.apache.spark.sql.graft.BatchedLeaf.coalesce(ds, math.max(1L,
             math.min(par.toLong, rows / 200000L + 1L)).toInt)
         fState.swapOverlay(fo, counts("fo"))
         fState.addInserts(sized(fn, counts("fn")), counts("fn"))
@@ -433,8 +448,18 @@ final class CrawlDriver(
       roundWallSec :+= (System.nanoTime() - tRound) / 1e9
       r += 1
     }
-    if (store.isDefined) checkpoint(lastNow)
+    // a final commit only for what the last in-loop checkpoint missed: a
+    // second commit of the same state would publish an empty snapshot
+    if (store.isDefined && (roundNo != checkpointedRound || hasPending))
+      checkpoint(lastNow)
   }
+
+  /** The round number the latest snapshot was committed (or resumed) at. */
+  private var checkpointedRound: Long = -1L
+
+  private def hasPending: Boolean =
+    Seq(pendingF, pendingH, pendingL, pendingE, pendingP, pendingTraceParts)
+      .exists(_.nonEmpty)
 
   /** Materialize all persisted parts and count each — ONE Spark job over a
     * tagged union (scanning `(lit(tag), bucket)` off a persisted plan
@@ -539,6 +564,7 @@ final class CrawlDriver(
     pendingEB = Set.empty; pendingPB = Set.empty
     pendingTraceParts = Vector.empty
     pendingMetrics = Map.empty
+    checkpointedRound = roundNo
   }
 
   /** Restore state from the latest snapshot (or a specific version).
@@ -577,6 +603,7 @@ final class CrawlDriver(
     roundOffsets = Vector.empty
     seq = snap.seq
     roundNo = snap.round
+    checkpointedRound = snap.round
     lastNow = snap.now
     mergeBloomFrom(fState.keys, fState.rows) // rebuild seen-bloom from state
     true
@@ -731,6 +758,8 @@ final class CrawlDriver(
 }
 
 object CrawlDriver {
+  private val UseIdInClassName = "spark.sql.codegen.useIdInClassName"
+
   /** COW bucket assignment — the Scala reference semantics; the driver's
     * columnar bucket expressions below must agree (pinned by a spec). */
   def fBucket(shorthash: Long, nb: Int): Int = (shorthash % nb).toInt

@@ -407,5 +407,6 @@ object GraftFunctions {
       es => SqL2(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("canon_key",
       es => CanonKey(es(0)), "built-in")
+    reg.createOrReplaceTempFunction("by_ref", ByRef.fromArgs, "built-in")
   }
 }

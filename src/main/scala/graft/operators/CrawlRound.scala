@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, explode, lit}
+import org.apache.spark.sql.functions.{coalesce, col, explode, expr, lit}
 import graft.core._
 import graft.functions.Urls
 
@@ -25,18 +25,23 @@ import graft.functions.Urls
  *     Only a finite crawl budget forces a top-k here (TakeOrdered over the
  *     remaining budget), truncating in exactly the reference's order.
  *  3. Simulated fetch: picks ⋈ web (pages ⋈ fetch_meta, raw header block)
- *     on url, ⋈ fetch_log on url_hash (If-Modified-Since/304 + rollback),
- *     then the shared pure Step.fetchAndProcess inside mapPartitions —
+ *     on url, ⋈ fetch_log on url_hash (If-Modified-Since/304 + rollback)
+ *     as flat columnar left joins, then the shared pure
+ *     Step.fetchAndProcess inside mapPartitions (the one typed boundary) —
  *     X7 header parse, policy gates, redirect follow, RDF/HTML extraction,
  *     TTL/error arithmetic all happen per-row with zero extra shuffles.
- *  4. The step output is persisted ONCE as a flat DataFrame — every
+ *  4. The step output is stored ONCE as a state leaf (row slabs) — every
  *     downstream consumer (frontier/host updates, fetch log, payload
- *     store, extracted text, trace, outlink candidates) reads a pruned
- *     column slice of the columnar cache, so the wide text/body columns
- *     are deserialized only by the consumers that need them.
+ *     store, extracted text, trace, outlink candidates) scans it with
+ *     zero-copy row reads, so the wide text/body columns are touched only
+ *     by the consumers that need them.
  *  5. Returned are pure DELTAS (updates + inserts per table); the driver
  *     owns state as base+overlay+inserts (tables.DeltaState) — a round
  *     never rewrites any full table.
+ *  6. Generated code is the same every round: the clock and round number
+ *     reach it as data (`by_ref`, StepOut columns), never as literals, so
+ *     a warm round reuses the classes Spark compiled for the rounds before
+ *     it (see CodegenReuseSpec).
  *
  * Skew note (SURVEY §7.4): the scheduling groupByKey must stay unsalted
  * (politeness is per-host), but its groups are tiny by construction —
@@ -74,15 +79,25 @@ object CrawlRound {
                               k4: Int, url: String, state_at_dequeue: String)
 
   /** A dequeued winner with its emission-order key flattened for sorting
-    * (k5 is the url itself). */
+    * (k5 is the url itself) and its host's robots.txt url ("" when the
+    * robots gate is off). */
   final case class Pick(f: FrontierEntry, h: HostEntry,
-                        k1: Int, k2: Long, k3: Long, k4: Int, k5: String)
-
-  /** A scheduled pick with its robots join key. */
-  final case class Sched(pick: Pick, robots_url: String)
+                        k1: Int, k2: Long, k3: Long, k4: Int, k5: String,
+                        robots_url: String)
 
   /** One host's robots.txt (url = <root>robots.txt). */
   final case class RobotsRow(url: String, body: Array[Byte])
+
+  /** A pick with everything its fetch step reads, as flat left-join
+    * columns: the web entry (`w_*`, all null when the url is not on the
+    * web), the fetch_log row (`c_*`, null on a cache miss) and the host's
+    * robots.txt body (null when absent or the gate is off). */
+  final case class FetchIn(
+      f: FrontierEntry, h: HostEntry,
+      k1: Int, k2: Long, k3: Long, k4: Int,
+      w_ts: Option[Long], w_body: Array[Byte], w_headers: String,
+      c_updated: Option[Long], c_status: Option[Int],
+      robots_body: Array[Byte])
 
   /** Everything one step produces: emission key + state updates + outputs.
     * Persisted as a flat DataFrame so consumers prune columns. */
@@ -100,11 +115,16 @@ object CrawlRound {
       status: Int,
       text: Option[String],
       body: Option[Array[Byte]],
-      outlinks: Seq[String])
+      outlinks: Seq[String],
+      /** The round's clock and number, carried as data so the delta
+        * projections read columns instead of inlining per-round literals
+        * into the generated code. */
+      now: Long,
+      round: Int)
 
-  /** Pure per-table DELTAS of one round (all unpersisted plans over the
-    * round-internal caches; the driver persists + materializes them in one
-    * job and folds them into its DeltaState/AppendState tables). */
+  /** Pure per-table DELTAS of one round (plans over the round-internal
+    * leaves; the driver leafs + materializes them in one job and folds
+    * them into its DeltaState/AppendState tables). */
   final case class RoundResult(
       picksCount: Long,
       fetchPhaseSec: Double,
@@ -122,7 +142,7 @@ object CrawlRound {
       pagesDelta: Dataset[PageStoreRow],
       extractedDelta: Dataset[ExtractedRow],
       trace: Dataset[TraceKeyed],
-      /** Unpersist round-internal caches — call AFTER materializing the
+      /** Release the round-internal leaves — call AFTER materializing the
         * returned deltas. */
       cleanup: () => Unit)
 
@@ -159,8 +179,8 @@ object CrawlRound {
   }
 
   /**
-   * Execute one round: runs ONE job (materializing the persisted step
-   * output, whose count is the picks count) and returns the delta plans.
+   * Execute one round: runs the step job (materializing the step output
+   * leaf, whose row count is the picks count) and returns the delta plans.
    */
   def run(
       spark: SparkSession,
@@ -178,14 +198,19 @@ object CrawlRound {
     import spark.implicits._
 
     val bcCfg = spark.sparkContext.broadcast(cfg)
+    val roundNo = round.toInt
+    graft.functions.GraftFunctions.register(spark) // canon_key, by_ref
+    // `now` reaches the generated code by reference, never as a literal:
+    // a literal gives every round new Java source and a full recompile
+    val nowCol = graft.functions.ByRef.col(spark, now)
 
     // --- 1. A1 dequeue --------------------------------------------------
     // Column-level filters: stay columnar over the cached state (pushdown
     // at 100TB scale = partition pruning on next_fetch); hosts filter
     // keeps only currently-eligible hosts so the join side stays minimal.
     val eligibleHosts = hosts
-      .filter(col("rate") > 0 && col("earliest_update") < lit(now))
-    val due = frontier.filter(col("next_fetch") < lit(now))
+      .filter(col("rate") > 0 && col("earliest_update") < nowCol)
+    val due = frontier.filter(col("next_fetch") < nowCol)
 
     // hosts ≪ frontier (1 row/host). No forced broadcast hint: a driver-built
     // broadcast of a large host table is a serial bottleneck — AQE sees the
@@ -197,7 +222,8 @@ object CrawlRound {
 
     // Typed per-host top-1 (north_rule's groupByKey + flatMapGroups).
     // Fold, don't buffer: group size is unbounded (mega-hosts) but the
-    // winner needs O(1) state.
+    // winner needs O(1) state. The winner also carries its robots join key.
+    val robotsOn = cfg.robotsEnabled
     val picks: Dataset[Pick] = joined
       .groupByKey(_._1.root_hash)
       .flatMapGroups { (_, it) =>
@@ -211,7 +237,11 @@ object CrawlRound {
         }
         val (f, h) = best
         val (k1, k2, k3, k4, k5) = Step.emitKey(f, h)
-        Iterator.single(Pick(f, h, k1, k2, k3, k4, k5))
+        val robotsUrl =
+          if (!robotsOn) ""
+          else Urls.canonicalRoot(f.url)
+            .map(graft.functions.Robots.robotsUrl).getOrElse("")
+        Iterator.single(Pick(f, h, k1, k2, k3, k4, k5, robotsUrl))
       }
 
     // --- 2. budget truncation (only a finite budget forces a sort) -------
@@ -221,46 +251,47 @@ object CrawlRound {
       else picks.orderBy("k1", "k2", "k3", "k4", "k5")
         .limit(math.max(0L, budgetLeft).toInt)
 
-    val robotsOn = cfg.robotsEnabled
-    val sched: Dataset[Sched] = scheduled.map { p =>
-      val rUrl =
-        if (!robotsOn) ""
-        else Urls.canonicalRoot(p.f.url)
-          .map(graft.functions.Robots.robotsUrl).getOrElse("")
-      Sched(p, rUrl)
-    }
-
     // --- 3. simulated fetch + process ------------------------------------
-    val withWeb: Dataset[(Sched, WebRow)] = sched
-      .joinWith(web, sched("pick.f.url") === web("url"), "left_outer")
-    val withCache: Dataset[((Sched, WebRow), CacheRow)] = withWeb
-      .joinWith(fetchLog, $"_1.pick.f.url_hash" === fetchLog("url_hash"),
-        "left_outer")
+    // Columnar left joins against web, fetch_log and robots; the only typed
+    // boundary is the step's mapPartitions (joinWith would wrap every side
+    // in nested structs and the step would decode the whole nest).
+    val webCols = web.select(col("url").as("w_url"), col("warc_ts").as("w_ts"),
+      col("body").as("w_body"), col("headers_raw").as("w_headers"))
+    val logCols = fetchLog.select(col("url_hash").as("c_hash"),
+      col("updated").as("c_updated"), col("status").as("c_status"))
+    val withCache = scheduled.toDF()
+      .join(webCols, col("f.url") === col("w_url"), "left_outer")
+      .join(logCols, col("f.url_hash") === col("c_hash"), "left_outer")
     // robots side: one row per host that HAS a robots.txt — small, AQE
-    // broadcasts it; empty (zero-cost join) when the gate is off. The
-    // driver passes a persisted cache so the derivation doesn't re-scan
-    // `web` every round (robots.txt bodies change on day scales, not
-    // round scales — in production this cache is the robots slice of the
-    // pages table, refreshed by its own TTL).
-    val robotsDs: Dataset[RobotsRow] =
-      if (!robotsOn) spark.emptyDataset[RobotsRow]
-      else robotsCache.getOrElse(robotsFromWeb(spark, web))
-    val withRobots: Dataset[(((Sched, WebRow), CacheRow), RobotsRow)] =
-      withCache.joinWith(robotsDs,
-        $"_1._1.robots_url" === robotsDs("url"), "left_outer")
+    // broadcasts it; no join at all when the gate is off. The driver
+    // passes a persisted cache so the derivation doesn't re-scan `web`
+    // every round (robots.txt bodies change on day scales, not round
+    // scales — in production this cache is the robots slice of the pages
+    // table, refreshed by its own TTL).
+    val withRobots =
+      if (!robotsOn) withCache.withColumn("robots_body", lit(null).cast("binary"))
+      else {
+        val robotsDs = robotsCache.getOrElse(robotsFromWeb(spark, web))
+        withCache.join(robotsDs.select(col("url").as("r_url"),
+            col("body").as("robots_body")),
+          col("robots_url") === col("r_url"), "left_outer")
+      }
+    val fetchIn: Dataset[FetchIn] = withRobots
+      .select("f", "h", "k1", "k2", "k3", "k4", "w_ts", "w_body", "w_headers",
+        "c_updated", "c_status", "robots_body")
+      .as[FetchIn]
 
-    val outs: Dataset[StepOut] = withRobots.mapPartitions { it =>
+    val outs: Dataset[StepOut] = fetchIn.mapPartitions { it =>
       val cfg = bcCfg.value
-      it.map { case ((((Sched(pick, _), webRow), cacheRow), robotsRow)) =>
-        val f = pick.f
-        val cached = Option(cacheRow)
-          .map(c => Step.CachedInfo(c.updated, c.status))
-        val wEntry = Option(webRow).map(w =>
-          Step.WebEntry(w.warc_ts, w.body, w.headers_raw))
+      it.map { in =>
+        val f = in.f
+        val cached = in.c_updated.map(u => Step.CachedInfo(u, in.c_status.get))
+        val wEntry = in.w_ts.map(ts =>
+          Step.WebEntry(ts, in.w_body, in.w_headers))
         // A2 politeness advance at dequeue (db.c:762-790)
-        val hAdvanced = Step.politenessAdvance(pick.h, now)
+        val hAdvanced = Step.politenessAdvance(in.h, now)
         val res = Step.fetchAndProcess(f.url, f.state, now, cached,
-          wEntry, cfg, Option(robotsRow).map(_.body))
+          wEntry, cfg, Option(in.robots_body))
         val (newF, newH) = res.path match {
           case Step.Path.Updated | Step.Path.Failed =>
             (Step.frontierUpdated(f, now, res.status, res.ttlArg, res.state),
@@ -269,30 +300,31 @@ object CrawlRound {
             (Step.frontierUnchanged(f, now, error = false),
              Step.rootUnchanged(hAdvanced, now))
         }
-        StepOut(pick.k1, pick.k2, pick.k3, pick.k4, f.url, f.state,
+        StepOut(in.k1, in.k2, in.k3, in.k4, f.url, f.state,
           newF, newH, res.commit, cached.isDefined, res.status,
           res.extractedText,
-          if (res.commit) Some(Option(webRow).map(_.body)
+          if (res.commit) Some(wEntry.map(_.body)
             .getOrElse(Array.emptyByteArray)) else None,
-          res.outlinks)
+          res.outlinks, now, roundNo)
       }
     }
 
-    // The step output fans out to 7 consumers — persist ONCE as a flat
-    // DataFrame; the columnar cache serves each consumer a pruned column
-    // slice (the wide text/body columns are read only by their consumers).
-    // OFF_HEAP when the session has an off-heap pool: the round's bulky
-    // caches otherwise fill the GC old generation (25-50% of big-sweep
-    // wall went to collector pauses).
-    val stateLevel =
-      if (spark.conf.getOption("spark.memory.offHeap.enabled")
-          .contains("true"))
-        org.apache.spark.storage.StorageLevel.OFF_HEAP
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val stepOuts: DataFrame = outs.toDF().persist(stateLevel)
+    // The step output fans out to 8 consumers — store it ONCE as a state
+    // leaf (row slabs, zero-copy reads; OFF_HEAP when the session has an
+    // off-heap pool, or the round's bulky rows fill the GC old generation).
+    // A columnar cache would add a generated accessor class per distinct
+    // column slice its consumers read. Every round-internal leaf is
+    // released by the round's cleanup.
+    val stateLevel = graft.tables.StateLeaf.levelFor(spark)
+    val roundLeaves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def roundLeaf(df: DataFrame): DataFrame = {
+      roundLeaves += graft.tables.StateLeaf.lazyLeaf(df, stateLevel)
+      roundLeaves.last
+    }
+    val stepOuts = roundLeaf(outs.toDF())
     val verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")
     val t0 = System.nanoTime()
-    val picksCount = stepOuts.count()
+    val picksCount = graft.tables.StateLeaf.countRows(Seq(stepOuts)).head
     val fetchPhaseSec = (System.nanoTime() - t0) / 1e9
     if (verbose) println(f"[round-timing]   fetch+process: $fetchPhaseSec%.2fs")
 
@@ -300,16 +332,18 @@ object CrawlRound {
     val updatedF = stepOuts.select($"newF.*").as[FrontierEntry]
     val updatedH = stepOuts.select($"newH.*").as[HostEntry]
     val commits  = stepOuts.filter(col("commit"))
+    // the split is by_ref too: both halves then run one generated class
     def logRows(cacheHit: Boolean): Dataset[CacheRow] = commits
-      .filter(if (cacheHit) col("hadCache") else !col("hadCache"))
-      .select($"newF.url_hash".as("url_hash"), lit(now).as("updated"),
+      .filter(col("hadCache").cast("long") ===
+        graft.functions.ByRef.col(spark, if (cacheHit) 1L else 0L))
+      .select($"newF.url_hash".as("url_hash"), col("now").as("updated"),
         col("status"))
       .as[CacheRow]
     val logUpdates = logRows(cacheHit = true)
     val logInserts = logRows(cacheHit = false)
     val pagesDelta = commits
       .select($"newF.url_hash".as("url_hash"), col("url"),
-        lit(now).as("updated"),
+        col("now").as("updated"),
         coalesce(col("body"), lit(Array.emptyByteArray)).as("body"))
       .as[PageStoreRow]
     val extractedDelta = commits
@@ -317,54 +351,45 @@ object CrawlRound {
       .select(col("url"), col("text"))
       .as[ExtractedRow]
     val trace = stepOuts
-      .select(lit(round.toInt).as("round"), col("k1"), col("k2"), col("k3"),
+      .select(col("round"), col("k1"), col("k2"), col("k3"),
         col("k4"), col("url"), col("state_at_dequeue"))
       .as[TraceKeyed]
 
     // --- 5. discovered URLs: canonicalize → seen-filter → insert ---------
-    // canon_key is the native codegen'd spelling of the old typed
-    // flatMap(canonicalKeyUrl → Candidate(urlHash, _)): the outlink
+    // canon_key is the native codegen'd canonicalize+hash: the outlink
     // stream (~15× the page count, the round's densest row stream) stays
     // columnar through canonicalize+hash+dedup with zero String
-    // materialization on the already-canonical fast path — the typed
-    // encoder boundary paid UTF8String→String→case-class→UTF8String per
-    // OUTLINK; it now runs once per DEDUPED candidate inside filterNew
+    // materialization on the already-canonical fast path
     // (functions/UrlKey.scala; parity pinned by UrlKeySpec, end-to-end by
     // the trace/seen-set suites).
-    graft.functions.GraftFunctions.register(spark)
-    val candidates: Dataset[SeenFilter.Candidate] =
-      if (sys.props.get("graft.canonKey").orElse(
-            sys.env.get("SPARK_GRAFT_CANON_KEY")).contains("typed"))
-        // the pre-r6 typed spelling, kept as the A/B escape hatch (same
-        // set/clear discipline as graft.stateLeaf)
-        stepOuts
-          .select(explode(col("outlinks")).as("raw")).as[String]
-          .flatMap(raw => Urls.canonicalKeyUrl(raw)
-            .map(c => SeenFilter.Candidate(Urls.urlHash(c), c)))
-          .dropDuplicates("url_hash")
-      else stepOuts
-        .select(explode(col("outlinks")).as("raw"))
-        .select(org.apache.spark.sql.functions.expr("canon_key(raw)").as("ck"))
-        .filter(col("ck").isNotNull)
-        .select(col("ck.url_hash").as("url_hash"), col("ck.url").as("url"))
-        .dropDuplicates("url_hash")
-        .as[SeenFilter.Candidate]
+    val candidates: Dataset[SeenFilter.Candidate] = stepOuts
+      .select(explode(col("outlinks")).as("raw"))
+      .select(expr("canon_key(raw)").as("ck"))
+      .filter(col("ck").isNotNull)
+      .select(col("ck.url_hash").as("url_hash"), col("ck.url").as("url"))
+      .distinct() // url_hash ↔ url is one-to-one: a key-only hash aggregate
+      .as[SeenFilter.Candidate]
 
-    val genuinelyNew = SeenFilter
-      .filterNew(spark, candidates, seenKeys, bloom)
-      .persist(stateLevel)
+    // The seen filter's level-2 output feeds two branches of one plan
+    // (a leaf, so the cuckoo build runs once), then one typed step turns
+    // each genuinely new url into its frontier row and its host row (a
+    // leaf, because both deltas read it).
+    val discovered = roundLeaf(SeenFilter
+      .filterNew(spark, candidates, seenKeys, bloom, share = roundLeaf)
+      .flatMap(c => Step.newFrontierEntryFromCanon(c.url, c.url_hash, now)
+        .map(f => (f, Step.newHostEntry(c.url, now, bcCfg.value))))
+      .toDF("f", "h"))
 
-    val newEntries: Dataset[FrontierEntry] = genuinelyNew
-      .flatMap(c => Step.newFrontierEntryFromCanon(c.url, c.url_hash, now))
-    val newHosts: Dataset[HostEntry] = genuinelyNew
-      .flatMap(c => Step.newHostEntry(c.url, now, bcCfg.value))
-      .dropDuplicates("root_hash")
+    val newEntries = discovered.select($"f.*").as[FrontierEntry]
+    // a new host row is a function of its root: whole-row distinct
+    val newHosts = discovered.filter(col("h").isNotNull).select($"h.*")
       .join(hosts.select("root_hash"), Seq("root_hash"), "left_anti")
+      .distinct()
       .as[HostEntry]
 
     RoundResult(picksCount, fetchPhaseSec,
       updatedF, newEntries, updatedH, newHosts,
       logUpdates, logInserts, pagesDelta, extractedDelta, trace,
-      cleanup = () => { stepOuts.unpersist(); genuinelyNew.unpersist() })
+      cleanup = () => roundLeaves.foreach(graft.tables.StateLeaf.release))
   }
 }

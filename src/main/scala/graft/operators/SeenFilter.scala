@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, udf}
 import org.apache.spark.util.sketch.BloomFilter
 
 /**
@@ -178,7 +179,10 @@ object SeenFilter {
     raise("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
       family.epochCapacity)
     raise("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", needBits)
-    val bf = hashes.toDF("url_hash")
+    // the not-null filter changes no bit (the aggregate skips nulls) but
+    // gives the key scan the plan of the round's other key scans, so it
+    // runs their generated class
+    val bf = hashes.toDF("url_hash").filter(col("url_hash").isNotNull)
       .stat.bloomFilter("url_hash", family.epochCapacity, family.fpp)
     require(bf.bitSize == needBits,
       s"bloom_filter_agg returned ${bf.bitSize} bits, family needs " +
@@ -194,47 +198,56 @@ object SeenFilter {
    * `seenHashes`. `bloom` may be null (skip level 1). Level 2 cogroups on
    * `shorthash % buckets` so each cuckoo table covers one co-partitioned
    * slice of the frontier.
+   *
+   * Columnar around the one typed cogroup: level 1 probes the bloom
+   * through a UDF and the level-2 flag splits rows with column filters, so
+   * the plan decodes no `Candidate` objects outside the cogroup. Level 2's
+   * output feeds two branches; `share` decides how they share it. The
+   * default recomputes the cogroup per branch. A caller that persists it
+   * there owns the cache and unpersists it after its last action.
    */
   def filterNew(
       spark: SparkSession,
       candidates: Dataset[Candidate],
       seenHashes: Dataset[String],
       bloom: SeenBloom,
-      buckets: Int = 32): Dataset[Candidate] = {
+      buckets: Int = 32,
+      share: DataFrame => DataFrame = identity): Dataset[Candidate] = {
     import spark.implicits._
-
-    // The candidate derivation (outlink explode → canonicalize → hash →
-    // dedup shuffle) is the expensive input and feeds three branches —
-    // persist it or every branch/action recomputes the whole pipeline
-    // (exchange reuse does not cross Spark actions).
-    val cands = candidates.persist()
+    val cands = candidates.toDF()
 
     // Level 1: bloom prefilter. definitelyNew skips all shuffles. The
     // broadcast is an immutable per-round snapshot so recomputation of
     // this round's lineage is deterministic.
     val (definitelyNew, possiblySeen) =
-      if (bloom == null) (spark.emptyDataset[Candidate], cands)
+      if (bloom == null) (spark.emptyDataset[Candidate].toDF(), cands)
       else {
         val b = spark.sparkContext.broadcast(bloom.snapshot())
-        (cands.filter(c => !b.value.mightContain(c.url_hash)),
-         cands.filter(c => b.value.mightContain(c.url_hash)))
+        // nondeterministic only to keep the optimizer from pushing the
+        // probe below the caller's dedup, which would split the shared
+        // candidate exchange into two pipelines
+        val maybeSeen = udf((h: String) => b.value.mightContain(h))
+          .asNondeterministic()
+        (cands.filter(!maybeSeen(col("url_hash"))),
+         cands.filter(maybeSeen(col("url_hash"))))
       }
 
-    // Level 2 (emits (candidate, passedCuckoo); passedCuckoo=false →
-    // definitely new). Persisted: three consumers below — without it the
-    // cogroup (and the cuckoo build) would execute once per consumer.
-    // Unpersisted by the ContextCleaner once the caller drops its results.
-    val refined = cuckooRefine(spark, possiblySeen, seenHashes, buckets)
-      .persist()
-    val cuckooNew = refined.filter(!_._2).map(_._1)
-    val residue   = refined.filter(_._2).map(_._1)
+    // Level 2: passedCuckoo=false → definitely new.
+    val refined = share(
+      cuckooRefine(spark, possiblySeen.as[Candidate], seenHashes, buckets)
+        .select(col("_1.url_hash").as("url_hash"), col("_1.url").as("url"),
+          col("_2").as("passed")))
+    // split by_ref, so both halves run one generated class
+    def passed(p: Boolean) = refined.filter(col("passed").cast("long") ===
+      graft.functions.ByRef.col(spark, if (p) 1L else 0L)).drop("passed")
+    val cuckooNew = passed(false)
+    val residue   = passed(true)
 
     // Level 3: authoritative anti-join for the residue.
     val exactNew = residue
       .join(seenHashes.toDF("url_hash"), Seq("url_hash"), "left_anti")
-      .as[Candidate]
 
-    definitelyNew.union(cuckooNew).union(exactNew)
+    definitelyNew.unionByName(cuckooNew).unionByName(exactNew).as[Candidate]
   }
 
   /**
@@ -252,12 +265,19 @@ object SeenFilter {
       seenHashes: Dataset[String],
       buckets: Int): Dataset[(Candidate, Boolean)] = {
     import spark.implicits._
-    def bucketOf(h: String): Int =
-      (java.lang.Long.parseLong(h.substring(0, 8), 16) % buckets).toInt
-    val candByBucket = candidates.groupByKey(c => bucketOf(c.url_hash))
-    val seenByBucket = seenHashes.groupByKey(bucketOf)
-    candByBucket.cogroup(seenByBucket) { (_, cands, seen) =>
-      val arr = seen.toArray
+    // bucket = shorthash % buckets, keyed by column so no row decodes
+    // before the cogroup itself. The seen side rides as Candidate rows
+    // (url null) so both sides share one row layout, and the key is the
+    // bucket's decimal string: the cogroup then reuses the generated
+    // partitioning, sort and key classes of the round's per-host pick
+    // (a string key in the same position).
+    def byBucket(df: DataFrame): KeyValueGroupedDataset[String, Candidate] =
+      df.groupBy((graft.driver.CrawlDriver.shorthashCol("url_hash") %
+        buckets).cast("string").as("bucket")).as[String, Candidate]
+    val seen = seenHashes.toDF("url_hash")
+      .withColumn("url", lit(null).cast("string"))
+    byBucket(candidates.toDF()).cogroup(byBucket(seen)) { (_, cands, seen) =>
+      val arr = seen.map(_.url_hash).toArray
       if (arr.isEmpty) cands.map(c => (c, false))
       else {
         val cf = new CuckooFilter(arr.length)

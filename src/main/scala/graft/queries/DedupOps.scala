@@ -365,8 +365,9 @@ object DedupOps {
       graft.operators.SeenFilter.buildBloom(corpus, bloom), corpus.count())
     val cands = batch.select(col("text_hash").as("url_hash"),
       col("doc_id").cast("string").as("url"))
-      .as[graft.operators.SeenFilter.Candidate]
-    graft.operators.SeenFilter.filterNew(s, cands, corpus, bloom)
+      .as[graft.operators.SeenFilter.Candidate].persist()
+    graft.operators.SeenFilter.filterNew(s, cands, corpus, bloom,
+        share = _.persist())
       .toDF()
       .groupBy(col("url_hash").as("text_hash"))
       .agg(min(col("url").cast("long")).as("keep_id"),

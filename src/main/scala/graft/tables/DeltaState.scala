@@ -39,7 +39,8 @@ final class DeltaState[T](spark: SparkSession, keyCol: String)
   def rows: Long = baseRows + insertRows
 
   private def allBaseAndInserts: Dataset[T] =
-    inserts.foldLeft(base)(_ unionByName _)
+    StateLeaf.union(if (baseRows == 0 && inserts.nonEmpty) inserts
+                    else base +: inserts)
 
   def view: Dataset[T] = {
     val all = allBaseAndInserts

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.types.StructType
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /**
@@ -236,13 +237,17 @@ final class SnapshotStore(val io: SnapshotIO) {
           val dir = io.resolve(relDir)
           val spark = delta.sparkSession
           val rowCols = delta.columns.filterNot(c => c == "bucket" || c == "_pi")
+          // the delta's row schema is the bucket files' schema: reading
+          // with it skips one schema-inference job per bucket file
+          val rowSchema = StructType(delta.schema.filter(f =>
+            rowCols.contains(f.name)))
           // previous content of ONLY the changed buckets (bucket value is a
           // partition dir in the manifest, not a file column — re-attach it)
           val prevPaths = changed.toSeq.sorted
             .flatMap(b => prevBuckets.get(b).map(b -> _))
           prevReads += table -> prevPaths.map(_._2)
           val prevDf = prevPaths.map { case (b, p) =>
-            spark.read.parquet(p)
+            spark.read.schema(rowSchema).parquet(p)
               .select(rowCols.map(col).toIndexedSeq: _*)
               .withColumn("bucket", lit(b))
               .withColumn("_pi", lit(0))

@@ -1,6 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graft.BatchedLeaf
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -45,8 +46,9 @@ object StateLeaf {
 
   /** Lazy plan-truncating leaf (the per-round hot path). */
   def lazyLeaf[T](ds: Dataset[T], level: StorageLevel): Dataset[T] =
-    if (batched) org.apache.spark.sql.graft.BatchedLeaf(ds, level)
-    else ds.localCheckpoint(eager = false, storageLevel = level)
+    if (batched) BatchedLeaf(ds, level)
+    else BatchedLeaf.capStats(
+      ds.localCheckpoint(eager = false, storageLevel = level))
 
   def lazyLeaf[T](ds: Dataset[T]): Dataset[T] =
     lazyLeaf(ds, levelFor(ds.sparkSession))
@@ -55,11 +57,45 @@ object StateLeaf {
     * materialized before this returns. */
   def eagerLeaf[T](ds: Dataset[T], level: StorageLevel): Dataset[T] =
     if (batched) {
-      val l = org.apache.spark.sql.graft.BatchedLeaf(ds, level)
+      val l = BatchedLeaf(ds, level)
       l.count(): Unit
       l
-    } else ds.localCheckpoint(eager = true, storageLevel = level)
+    } else BatchedLeaf.capStats(
+      ds.localCheckpoint(eager = true, storageLevel = level))
 
   def eagerLeaf[T](ds: Dataset[T]): Dataset[T] =
     eagerLeaf(ds, levelFor(ds.sparkSession))
+
+  /** Union of same-schema parts: one leaf scan when every part is a leaf
+    * (see BatchedLeaf.concat), a SQL union otherwise. */
+  def union[T](parts: Seq[Dataset[T]]): Dataset[T] =
+    if (parts.size == 1) parts.head
+    else if (parts.forall(BatchedLeaf.isLeaf)) BatchedLeaf.concat(parts)
+    else parts.reduce(_ unionByName _)
+
+  /** Materialize leaves and count each one's rows in ONE job over their
+    * row RDDs. Counting a leaf through SQL instead would compile a scan
+    * class per leaf schema; this job runs no generated code. */
+  def countRows(leaves: Seq[Dataset[_]]): Seq[Long] =
+    if (leaves.isEmpty) Nil
+    else {
+      val perPartition = leaves.head.sparkSession.sparkContext.union(
+        leaves.map(BatchedLeaf.rowsOf).zipWithIndex.map { case (rows, i) =>
+          rows.mapPartitions { it =>
+            var n = 0L
+            while (it.hasNext) { it.next(); n += 1 }
+            Iterator.single((i, n))
+          }
+        }).collect()
+      leaves.indices.map(i =>
+        perPartition.iterator.filter(_._1 == i).map(_._2).sum)
+    }
+
+  /** Drop a leaf's stored rows now rather than when the ContextCleaner
+    * gets to them. The leaf must not be read again. */
+  def release(leaf: Dataset[_]): Unit = {
+    val rows = BatchedLeaf.rowsOf(leaf)
+    BatchedLeaf.slabsOf(rows)
+      .getOrElse(rows).unpersist(blocking = false)
+  }
 }

@@ -55,12 +55,12 @@ object PlanDump {
     dump("Frontier INSERT delta (URL-seen filtered discoveries)",
       "Only the round's newly-discovered rows — the driver's DeltaState " +
       "folds them as an insert part; no full-table merge appears anywhere. " +
-      "The InMemoryTableScans are the round-internal persists (each " +
+      "The ExistingRDD scans are the round-internal leaves (each " +
       "expensive subtree evaluated exactly once).", res.newFrontier)
-    dump("Frontier UPDATE delta (column-pruned from the step cache)",
-      "Replace-by-key overlay rows: a pruned `newF.*` slice of the " +
-      "persisted step output — the wide text/body/outlinks columns are " +
-      "not deserialized here.", res.updatedFrontier)
+    dump("Frontier UPDATE delta (pruned from the step leaf)",
+      "Replace-by-key overlay rows: a `newF.*` projection of the stored " +
+      "step output — the wide text/body/outlinks columns are not " +
+      "read here.", res.updatedFrontier)
     res.cleanup()
 
     // --- headline pipeline-query plans (the shapes PlanSpec enforces) ----

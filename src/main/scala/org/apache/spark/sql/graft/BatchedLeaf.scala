@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset => CDataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
@@ -144,6 +145,53 @@ object BatchedLeaf {
       }
     }
 
+  private val RowsName = "graft.BatchedLeaf.rows"
+
+  /** The stored slab RDD behind a batched leaf's row RDD, if it is one. */
+  def slabsOf(rows: RDD[InternalRow]): Option[RDD[_]] =
+    if (rows.name == RowsName) Some(rows.firstParent[RowBatch]) else None
+
+  private def leafOf(ds: Dataset[_]): LogicalRDD =
+    ds.asInstanceOf[CDataset[_]].queryExecution.analyzed match {
+      case l: LogicalRDD => l
+      case other => throw new IllegalArgumentException(
+        s"not a state leaf: ${other.nodeName}")
+    }
+
+  /** The row RDD a leaf (batched or local checkpoint) scans. */
+  def rowsOf(ds: Dataset[_]): RDD[InternalRow] = leafOf(ds).rdd
+
+  /** Is `ds` a plan-truncated leaf (batched or local checkpoint)? */
+  def isLeaf(ds: Dataset[_]): Boolean =
+    ds.asInstanceOf[CDataset[_]].queryExecution.analyzed
+      .isInstanceOf[LogicalRDD]
+
+  private def withRows[T](like: Dataset[T], plans: Seq[LogicalRDD],
+                          rows: RDD[InternalRow]): Dataset[T] = {
+    val cds = like.asInstanceOf[CDataset[T]]
+    val stats = Statistics(sizeInBytes = plans.map(_.stats.sizeInBytes).sum
+      .min(BigInt(cds.sparkSession.sessionState.conf.defaultSizeInBytes)))
+    val leaf = LogicalRDD(plans.head.output.map(_.newInstance()), rows)(
+      cds.sparkSession, Some(stats), None)
+    new CDataset[T](cds.sparkSession, leaf, cds.exprEnc)
+  }
+
+  /** One leaf over the rows of same-schema leaves. A SQL union of leaves
+    * compiles a scan stage per distinct part plan into every query that
+    * reads it; this leaf is one scan of the concatenated partitions. */
+  def concat[T](parts: Seq[Dataset[T]]): Dataset[T] = {
+    val plans = parts.map(leafOf)
+    withRows(parts.head, plans,
+      parts.head.sparkSession.sparkContext.union(plans.map(_.rdd)))
+  }
+
+  /** The leaf's rows in at most `n` partitions, still a leaf (a narrow
+    * RDD coalesce — zero-copy once the rows are stored). */
+  def coalesce[T](ds: Dataset[T], n: Int): Dataset[T] = {
+    val plan = leafOf(ds)
+    withRows(ds, Seq(plan), plan.rdd.coalesce(n))
+  }
+
   /** Truncate `ds`'s logical plan to a batch-stored leaf at `level`.
     * Lazy: batches materialize on the first action that scans the leaf
     * (the round's counting job), after which the batch RDD's lineage is
@@ -184,7 +232,20 @@ object BatchedLeaf {
     val out: RDD[InternalRow] = batches
       .mapPartitions(_.flatMap(decodeBatch(_, nFields)),
         preservesPartitioning = true)
-    val leaf = LogicalRDD.fromDataset(out, cds, isStreaming = false)
-    new CDataset[T](cds.sparkSession, leaf, cds.exprEnc)
+      .setName(RowsName)
+    capStats(new CDataset[T](cds.sparkSession,
+      LogicalRDD.fromDataset(out, cds, isStreaming = false), cds.exprEnc))
+  }
+
+  /** The leaf with its size estimate capped at the session's default
+    * size (`spark.sql.defaultSizeInBytes`, the estimate of a relation of
+    * unknown size). A leaf inherits the estimate of the plan it stores,
+    * and join estimates multiply, so without a cap every round's leaves
+    * would square the estimate of the last: after ~20 rounds the planner
+    * spends minutes in BigInteger multiplication. */
+  def capStats[T](ds: Dataset[T]): Dataset[T] = {
+    val plan = leafOf(ds)
+    if (plan.stats.sizeInBytes <= plan.conf.defaultSizeInBytes) ds
+    else withRows(ds, Seq(plan), plan.rdd)
   }
 }

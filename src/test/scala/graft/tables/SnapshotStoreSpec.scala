@@ -102,6 +102,58 @@ class SnapshotStoreSpec extends SparkTestBase {
       .map(_.root_hash).toSet)
   }
 
+  test("two checkpointed run(now, 1) calls publish two manifests, both " +
+       "with round metrics, and resume from the second") {
+    val dir = Files.createTempDirectory("graft-snap-once").toString
+    val st = makeStore(dir)
+    val drv = freshDriver(st, every = 1)
+    drv.run(T0, 1)
+    drv.run(T0 + 1, 1)
+    assert(st.latestVersion.contains(2))
+    (1 to 2).foreach(v => assert(st.load(v).metrics.contains("picks"),
+      s"v$v carries no picks"))
+    val resumed = new CrawlDriver(spark, FixtureWeb.config(),
+      CrawlRound.webFromMap(spark, FixtureWeb.generate()), Some(st),
+      numBuckets = 8)
+    assert(resumed.resume())
+    assert(resumed.traceRows == drv.traceRows)
+    assert(resumed.seenSet == drv.seenSet)
+  }
+
+  test("an incremental commit reads previous buckets with the delta's " +
+       "schema: one write job per changed table, no inference jobs") {
+    val dir = Files.createTempDirectory("graft-snap-jobs").toString
+    val st = makeStore(dir)
+    val drv = freshDriver(st)
+    drv.run(T0, 6)
+    // new hosts dirty most frontier and hosts buckets
+    drv.seed((0 until 40).map(i => s"http://late$i.example.org/p"), T0 + 6)
+    val group = "snapshot-commit-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "commit")
+      drv.checkpoint(T0 + 7)
+      org.apache.spark.sql.graft.SparkInternals.drainListeners(spark)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val reads = st.lastCommitPrevReads
+    assert(reads("frontier").size > 1 && reads("hosts").size > 1)
+    // two per rewritten table (the last-writer-wins window's shuffle
+    // stage, then the write) and the (empty) trace append; reading the
+    // previous buckets without a schema added one job per bucket file
+    assert(jobs.get <= 5, s"${jobs.get} jobs for one commit")
+  }
+
   test("storage scheme is pluggable: a recording SnapshotIO backend serves " +
        "commits, loads and resume (caches/s3.c analog seam)") {
     val root = Files.createTempDirectory("graft-snap-io").toString
