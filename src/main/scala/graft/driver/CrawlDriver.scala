@@ -76,8 +76,6 @@ final class CrawlDriver(
   /** Accumulated work-phase wall seconds across rounds (bench metric):
     * the fetch+process job + the delta-materialization job + bloom build. */
   var workPhaseSec: Double = 0.0
-  /** Per-round end-to-end wall seconds (flatness evidence for the bench). */
-  var roundWallSec: Vector[Double] = Vector.empty
   private var snapshot: Option[SnapshotStore.Snapshot] = None
   private val bloom = new SeenFilter.SeenBloom()
 
@@ -152,10 +150,7 @@ final class CrawlDriver(
   private[graft] val stateLevel: org.apache.spark.storage.StorageLevel =
     graft.tables.StateLeaf.levelFor(spark)
 
-  /** Plan-truncating state leaves (see [[graft.tables.StateLeaf]]):
-    * batch-stored by default since r5 — the checkpoint blocks' per-row
-    * Java (de)serialization was the largest allocation source in a 4M
-    * local[32] JFR profile and GC share is what caps 8v32 scaling.
+  /** Plan-truncating state leaves (see [[graft.tables.StateLeaf]]).
     * `.stateLeaf` is the lazy form (materializes in the round's one
     * counting job); `.stateLeafEager` materializes before returning. */
   private implicit class LeafOps[T](ds: Dataset[T]) {
@@ -173,27 +168,20 @@ final class CrawlDriver(
     * scaling efficiency at (f + W/c)/(4f + W/c). The leafs are
     * independent plans (fo/ho/lo depend only on fu/hu/lu's returned
     * Dataset handles), so they finalize concurrently here — multi-thread
-    * job submission into one SparkContext is the supported pattern. */
+    * job submission into one SparkContext is the supported pattern. One
+    * thread per leaf future a round submits. */
   private val leafPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      // 1 = serial finalization (the pre-r4 behavior, kept for A/B —
-      // a 1-thread pool runs the Future chain in submission order).
-      // Bad knob values degrade to the default instead of failing driver
-      // construction; 0/negative clamp to 1 (serial).
-      sys.props.get("graft.leafThreads")
-        .orElse(sys.env.get("SPARK_GRAFT_LEAF_THREADS"))
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-        .map(math.max(1, _)).getOrElse(12),
+    java.util.concurrent.Executors.newFixedThreadPool(12,
       (r: Runnable) => {
         val t = new Thread(r, "graft-leaf"); t.setDaemon(true); t
       })
   private val leafEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(leafPool)
 
-  /** Release driver-owned resources (the leaf pool). Campaign harnesses
-    * (Bench/SweepMany) create a driver per sweep in ONE shared JVM —
-    * without this, each sweep leaks 12 idle daemon threads. Idempotent;
-    * the driver is unusable for further rounds after close. */
+  /** Release driver-owned resources (the leaf pool). A JVM that creates
+    * many drivers (tests, benchmark runs) otherwise keeps 12 idle daemon
+    * threads per driver. Idempotent; the driver is unusable for further
+    * rounds after close. */
   def close(): Unit = leafPool.shutdown()
 
   private val verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")
@@ -311,7 +299,6 @@ final class CrawlDriver(
     while (r < rounds && seq < cfg.budget) {
       val now = t0 + r
       lastNow = now
-      val tRound = System.nanoTime()
       maybeCompact()
 
       val (res, roundSec) = timed("roundBuild+fetch") {
@@ -445,7 +432,6 @@ final class CrawlDriver(
       res.cleanup()
       roundNo += 1
       if (store.isDefined && roundNo % checkpointEvery == 0) checkpoint(now)
-      roundWallSec :+= (System.nanoTime() - tRound) / 1e9
       r += 1
     }
     // a final commit only for what the last in-loop checkpoint missed: a

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.driver.CrawlDriver
 import graft.operators.CrawlRound
 import graft.sim.FixtureWeb
@@ -19,14 +18,7 @@ object CrawlDemo {
   def main(args: Array[String]): Unit = {
     val snapDir = args.headOption.getOrElse("/tmp/graft-demo-snapshots")
     val rounds  = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-crawl-demo")
 
     val T0  = 1000000L
     val cfg = FixtureWeb.config()

@@ -73,17 +73,6 @@ object Maintain {
       case None => println(s"[maintain] no snapshots under ${st.io.root}")
     }
 
-  private def session(name: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val objectStore = args.contains("--object-store")
     val rest = args.filterNot(_ == "--object-store")
@@ -94,12 +83,12 @@ object Maintain {
     if (rest.lift(1).contains("rebucket")) {
       val n = rest.lift(2).map(_.toInt).getOrElse(
         sys.error("usage: Maintain [--object-store] <snapshotRoot> rebucket <N>"))
-      val spark = session("graft-rebucket")
+      val spark = LocalSession("graft-rebucket")
       rebucket(spark, st, n)
       spark.stop()
     } else {
       val retain = rest.lift(1).map(_.toInt).getOrElse(2)
-      val spark = session("graft-maintain")
+      val spark = LocalSession("graft-maintain")
       val _ = maintain(spark, st, retain)
       spark.stop()
     }

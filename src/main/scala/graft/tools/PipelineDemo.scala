@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.driver.CrawlDriver
 import graft.operators.{CorpusBridge, CrawlRound}
@@ -22,14 +21,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-pipeline-demo")
     val rounds = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-pipeline-demo")
 
     // --- 1. crawl ------------------------------------------------------
     val T0  = 1000000L

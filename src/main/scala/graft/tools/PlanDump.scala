@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.driver.CrawlDriver
 import graft.operators.CrawlRound
 import graft.sim.FixtureWeb
@@ -14,13 +13,7 @@ import graft.sim.FixtureWeb
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-plandump")
 
     val t0  = 1000000L
     val cfg = FixtureWeb.config()

@@ -1,16 +1,16 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dump `.explain("formatted")` of declared queries to files — the
   * before/after plan evidence for optimization rounds (plans/rNN/).
   *
   * Usage: runMain graft.tools.PlanDumpQ <outDir> <suffix> <q1,q2,...|all>
-  * Writes <outDir>/<query>_<suffix>.txt for each query. Session mirrors
-  * the bench's (local[32], 64 shuffle partitions, AQE on) so the initial
-  * plans match what the bench executes.
+  * Writes <outDir>/<query>_<suffix>.txt for each query. Session matches
+  * the benchmark's query session on this machine (local[cores], 2 × cores
+  * shuffle partitions, AQE on by default) so the initial plans match what
+  * perfbench executes.
   */
 object PlanDumpQ {
   def main(args: Array[String]): Unit = {
@@ -23,27 +23,8 @@ object PlanDumpQ {
         SparkEntry.queries.keys.filterNot(_ == "q00_crawl_trace").toSeq.sorted
       else args(2).split(",").toSeq
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-plandumpq")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // shuffle/serializer configs matched to the bench session too —
-      // they do not change explain output today, but keeping the block
-      // identical avoids silent divergence of the plan evidence if a
-      // plan-relevant config is ever added there
-      .config("spark.shuffle.compress", "true")
-      .config("spark.shuffle.spill.compress", "true")
-      .config("spark.rdd.compress", "true")
-      .config("spark.serializer",
-        "org.apache.spark.serializer.JavaSerializer")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "12g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Runtime.getRuntime.availableProcessors
+    val spark = LocalSession("graft-plandumpq", cpus, cpus * 2)
     try {
       names.foreach { name =>
         val fn = SparkEntry.queries.getOrElse(name,

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.util.CallSite
 
 /**
  * Plan-truncating BATCHED state leaf — the successor to the engine's lazy
@@ -199,8 +200,19 @@ object BatchedLeaf {
   def apply[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
     val cds = ds.asInstanceOf[CDataset[T]]
     val qe = cds.queryExecution
-    // Forces AQE plan finalization on this thread (see scaladoc).
-    val rowRdd = qe.toRdd
+    // Forces AQE plan finalization on this thread (see scaladoc). AQE
+    // submits the plan's shuffle-stage jobs from Spark's exchange pool,
+    // whose threads carry this thread's local properties but none of its
+    // frames; the caller's call site, set as a property for the duration,
+    // names the code those jobs (and their stages) run for.
+    val sc = cds.sparkSession.sparkContext
+    val prevShort = sc.getLocalProperty(CallSite.SHORT_FORM)
+    val prevLong = sc.getLocalProperty(CallSite.LONG_FORM)
+    sc.setCallSite(sc.getCallSite())
+    val rowRdd = try qe.toRdd finally {
+      sc.setLocalProperty(CallSite.SHORT_FORM, prevShort)
+      sc.setLocalProperty(CallSite.LONG_FORM, prevLong)
+    }
     val schema = qe.executedPlan.schema
     val nFields = schema.length
     val batches: RDD[RowBatch] = rowRdd
@@ -243,7 +255,7 @@ object BatchedLeaf {
     * and join estimates multiply, so without a cap every round's leaves
     * would square the estimate of the last: after ~20 rounds the planner
     * spends minutes in BigInteger multiplication. */
-  def capStats[T](ds: Dataset[T]): Dataset[T] = {
+  private def capStats[T](ds: Dataset[T]): Dataset[T] = {
     val plan = leafOf(ds)
     if (plan.stats.sizeInBytes <= plan.conf.defaultSizeInBytes) ds
     else withRows(ds, Seq(plan), plan.rdd)

@@ -1,6 +1,7 @@
 package graft.tables
 
 import graft.SparkTestBase
+import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -8,14 +9,15 @@ import org.apache.spark.storage.StorageLevel
  * BatchedLeaf / StateLeaf contract:
  *  1. round-trip fidelity for every column shape the crawl state uses
  *     (strings incl. empty/unicode, nullable fields, binary payloads,
- *     arrays, nested structs, longs) — batched ≡ checkpoint ≡ raw;
+ *     arrays, nested structs, longs) — leaf ≡ raw;
  *  2. the leaf's logical plan is a genuine LEAF (LogicalRDD — the
  *     anti-exponential-analysis property the round loop depends on);
  *  3. multi-scan stability: repeated actions over one leaf see identical
  *     data (zero-copy UnsafeRow wraps share slabs — rows must be
  *     independent and immutable across scans and within joins);
  *  4. wide rows exercise the slab-growth path (row > initial 64 KiB buf);
- *  5. eager variant materializes without changing results.
+ *  5. eager variant materializes without changing results;
+ *  6. jobs a leaf starts while it is built name the calling code.
  */
 case class StateLeafNested(a: Long, b: String)
 case class StateLeafWide(id: Long, s: String, maybe: Option[String],
@@ -55,12 +57,6 @@ class StateLeafSpec extends SparkTestBase {
     val ds = data.toDS().repartition(5)
     val leaf = StateLeaf.lazyLeaf(ds, StorageLevel.MEMORY_AND_DISK)
     assert(canon(leaf) === canon(ds))
-    // checkpoint strategy agrees
-    System.setProperty("graft.stateLeaf", "checkpoint")
-    try {
-      val ck = StateLeaf.lazyLeaf(ds, StorageLevel.MEMORY_AND_DISK)
-      assert(canon(ck) === canon(leaf))
-    } finally System.clearProperty("graft.stateLeaf")
   }
 
   test("batched leaf logical plan is a LogicalRDD leaf") {
@@ -136,5 +132,38 @@ class StateLeafSpec extends SparkTestBase {
     val leaf = StateLeaf.lazyLeaf(s.emptyDataset[Wide],
       StorageLevel.MEMORY_AND_DISK)
     assert(leaf.count() === 0)
+  }
+
+  test("jobs started while a leaf is built carry the caller's frames") {
+    // With AQE on, building a leaf runs the plan's shuffle stages, and
+    // AQE submits their jobs from Spark's exchange pool: without a call
+    // site set by the leaf, those jobs show only pool-thread frames and
+    // no listener can tell which program code they ran for.
+    val s = spark
+    import s.implicits._
+    val aqe = s.conf.get("spark.sql.adaptive.enabled")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        js.stageInfos.foreach(st => details.add(st.details))
+    }
+    val ds = mkData(200).toDS().groupBy($"id" % 7).count()
+    SparkInternals.drainListeners(s)
+    s.sparkContext.addSparkListener(listener)
+    try {
+      StateLeaf.lazyLeaf(ds, StorageLevel.MEMORY_AND_DISK)
+      SparkInternals.drainListeners(s)
+    } finally {
+      s.sparkContext.removeSparkListener(listener)
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    assert(!details.isEmpty, "building the leaf started no job")
+    // a frame of a graft.* class (a class-loader prefix ends in '/')
+    val programFrame = "(^|/)graft\\.".r
+    details.forEach(d => assert(
+      d.linesIterator.exists(programFrame.findFirstIn(_).isDefined),
+      s"job stage without a program frame:\n$d"))
   }
 }
