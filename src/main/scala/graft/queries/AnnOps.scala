@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,10 +38,35 @@ object AnnOps {
     s.read.parquet(s"$dir/embeddings.parquet")
   }
 
-  /** Native sequential-fold dot product (≡ the SQL
+  /** Cosine similarity of the vector columns `a` and `b`, every dot
+    * product the native sequential-fold `vec_dot` (≡ the SQL
     * `aggregate(zip_with(a, b, (x,y) -> double(x)·double(y)), 0D, +)`
     * fold — parity pinned by VecSigSpec). */
-  private val dot = "vec_dot(%s, %s)"
+  private def cosine(a: String, b: String): Column =
+    expr(s"vec_dot($a, $b)") /
+      (sqrt(expr(s"vec_dot($a, $a)")) * sqrt(expr(s"vec_dot($b, $b)")))
+
+  /** The exact cosine top-3 of q30/q31/q36/q38: each query vector of `q`
+    * (vec_id < 5) against the corpus vectors of `c` (vec_id ≥ 5) it meets
+    * on `joinKeys` (all when none), ties to the lower neighbor_id. Both
+    * sides carry (vec_id, embedding, joinKeys...); output: (query_id,
+    * keepCols..., neighbor_id, round(cos·1e6) as cos_e6). */
+  private def top3(q: DataFrame, c: DataFrame, joinKeys: Seq[String],
+                   keepCols: Seq[String]): DataFrame = {
+    def side(df: DataFrame, id: String, vec: String) = df.select(
+      col("vec_id").as(id) +: joinKeys.map(col) :+ col("embedding").as(vec): _*)
+    val qs = side(q, "query_id", "qe").filter(col("query_id") < 5)
+    val cs = side(c, "neighbor_id", "ce").filter(col("neighbor_id") >= 5)
+    (if (joinKeys.isEmpty) qs.crossJoin(cs) else qs.join(cs, joinKeys))
+      .withColumn("cos", cosine("qe", "ce"))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("query_id")
+          .orderBy(col("cos").desc, col("neighbor_id").asc)))
+      .filter(col("rn") <= 3)
+      .select((Seq("query_id") ++ keepCols :+ "neighbor_id").map(col) :+
+        round(col("cos") * 1000000).cast("long").as("cos_e6"): _*)
+  }
 
   // ------------------------------------------------ hyperplane signatures
 
@@ -94,23 +119,7 @@ object AnnOps {
     * all vec_id ≥ 5. */
   def bruteForceTopK(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val q = e.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")).filter(col("query_id") < 5)
-    val c = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ce")).filter(col("neighbor_id") >= 5)
-    val scored = q.crossJoin(c)
-      .withColumn("dotqc", expr(dot.format("qe", "ce")))
-      .withColumn("nq", expr(dot.format("qe", "qe")))
-      .withColumn("nc", expr(dot.format("ce", "ce")))
-      .withColumn("cos", col("dotqc") / (sqrt(col("nq")) * sqrt(col("nc"))))
-    scored
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos") * 1000000).cast("long").as("cos_e6"))
+    top3(e, e, Seq.empty, Seq.empty)
   }
 
   private val duckDot =
@@ -142,22 +151,7 @@ object AnnOps {
     * touches 1/2^k of the corpus. */
   def ivfTopK(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).withColumn("cell", expr(cellSpark))
-    val q = e.select(col("vec_id").as("query_id"), col("cell"),
-      col("embedding").as("qe")).filter(col("query_id") < 5)
-    val c = e.select(col("vec_id").as("neighbor_id"), col("cell"),
-      col("embedding").as("ce")).filter(col("neighbor_id") >= 5)
-    q.join(c, Seq("cell"))
-      .withColumn("dotqc", expr(dot.format("qe", "ce")))
-      .withColumn("nq", expr(dot.format("qe", "qe")))
-      .withColumn("nc", expr(dot.format("ce", "ce")))
-      .withColumn("cos", col("dotqc") / (sqrt(col("nq")) * sqrt(col("nc"))))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        round(col("cos") * 1000000).cast("long").as("cos_e6"))
+    top3(e, e, Seq("cell"), Seq("cell"))
   }
 
   val ivfTopKSql: String =
@@ -195,23 +189,9 @@ object AnnOps {
     val e = emb(s, dir).withColumn("cell", expr(cellSpark))
     val probes = (0 until CellBits)
       .map(j => s"cell ^ ${1 << j}").mkString("array(cell, ", ", ", ")")
-    val q = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(expr(probes)).as("cell"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("cell"),
-      col("embedding").as("ce")).filter(col("neighbor_id") >= 5)
-    q.join(c, Seq("cell"))
-      .withColumn("cos",
-        expr(dot.format("qe", "ce")) /
-          (sqrt(expr(dot.format("qe", "qe"))) *
-           sqrt(expr(dot.format("ce", "ce")))))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos") * 1000000).cast("long").as("cos_e6"))
+    val q = e.select(col("vec_id"), col("embedding"),
+      explode(expr(probes)).as("cell"))
+    top3(q, e, Seq("cell"), Seq.empty)
   }
 
   val ivfMultiprobeTopKSql: String = {
@@ -264,10 +244,7 @@ object AnnOps {
         Seq("vec_a"))
       .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb")),
         Seq("vec_b"))
-      .withColumn("cos",
-        expr(dot.format("ea", "eb")) /
-          (sqrt(expr(dot.format("ea", "ea"))) *
-           sqrt(expr(dot.format("eb", "eb")))))
+      .withColumn("cos", cosine("ea", "eb"))
       .filter(col("cos") >= 0.4)
       .select(col("vec_a"), col("vec_b"),
         round(col("cos") * 1000000).cast("long").as("cos_e6"))
@@ -502,22 +479,7 @@ object AnnOps {
     * untrained hyperplane cells' on the clustered fixture). */
   def kmeansTopK(s: SparkSession, dir: String): DataFrame = {
     val e = embWithCell(s, dir)
-    val q = e.select(col("vec_id").as("query_id"), col("cell"),
-      col("embedding").as("qe")).filter(col("query_id") < 5)
-    val c = e.select(col("vec_id").as("neighbor_id"), col("cell"),
-      col("embedding").as("ce")).filter(col("neighbor_id") >= 5)
-    q.join(c, Seq("cell"))
-      .withColumn("cos",
-        expr(dot.format("qe", "ce")) /
-          (sqrt(expr(dot.format("qe", "qe"))) *
-           sqrt(expr(dot.format("ce", "ce")))))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        round(col("cos") * 1000000).cast("long").as("cos_e6"))
+    top3(e, e, Seq("cell"), Seq("cell"))
   }
 
   val kmeansTopKSql: String =
@@ -566,10 +528,7 @@ object AnnOps {
       col("embedding").as("eb"))
     val dups = a.join(b, Seq("cell"))
       .filter(col("va") < col("vb"))
-      .withColumn("cos",
-        expr(dot.format("ea", "eb")) /
-          (sqrt(expr(dot.format("ea", "ea"))) *
-           sqrt(expr(dot.format("eb", "eb")))))
+      .withColumn("cos", cosine("ea", "eb"))
       .filter(col("cos") >= 0.4)
       .select(col("vb").as("vec_id")).distinct()
     e.select(col("vec_id"), col("cell"))
@@ -802,7 +761,7 @@ object AnnOps {
   def norms(s: SparkSession, dir: String): DataFrame =
     emb(s, dir)
       .select(col("vec_id"), col("label"),
-        round(sqrt(expr(dot.format("embedding", "embedding"))) * 1000000)
+        round(sqrt(expr("vec_dot(embedding, embedding)")) * 1000000)
           .cast("long").as("norm_e6"))
 
   val normsSql: String =

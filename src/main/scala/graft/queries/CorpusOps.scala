@@ -548,21 +548,15 @@ object CorpusOps {
             col("doc_id").cast("string")), 256), 1, 8), 16, 10)
           .cast("long") % 100).as("b"),
         array_distinct(split(col("text"), " ")).as("toks"))
-      .withColumn("split", expr(
+      .withColumn("sp", expr(
         "CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'" +
           " ELSE 'test' END"))
-      .select("doc_id", "split", "toks")
-      .persist() // both pair sides read it
-    DedupOps.lshCandidatePairs(s, dir)
-      .join(meta.select(col("doc_id").as("doc_a"),
-        col("split").as("sp_a"), col("toks").as("toks_a")), Seq("doc_a"))
-      .join(meta.select(col("doc_id").as("doc_b"),
-        col("split").as("sp_b"), col("toks").as("toks_b")), Seq("doc_b"))
+      .select("doc_id", "sp", "toks")
+    DedupOps.verifyPairs(DedupOps.lshCandidatePairs(s, dir), meta)
       .select(
         least(col("sp_a"), col("sp_b")).as("split_a"),
         greatest(col("sp_a"), col("sp_b")).as("split_b"),
-        when(size(array_intersect(col("toks_a"), col("toks_b"))) * 2 >=
-             size(array_union(col("toks_a"), col("toks_b"))), 1L)
+        when(col("inter_cnt") * 2 >= col("union_cnt"), 1L)
           .otherwise(0L).as("is_dup"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).cast("long").as("n_candidates"),

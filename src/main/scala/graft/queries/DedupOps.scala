@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -102,6 +102,24 @@ object DedupOps {
        |  ON a.b = b.b AND a.band_hash = b.band_hash
        |    AND a.doc_id < b.doc_id""".stripMargin
 
+  /** The pair verifier of q13, q17, q72, q78 and q82: every (doc_a, doc_b)
+    * pair joined (doc-keyed, shuffle ∝ candidates) to both docs' rows of
+    * `sides` (doc_id, toks, ...), whose columns arrive suffixed `_a`/`_b`,
+    * plus the unigram-set `inter_cnt`/`union_cnt` of toks_a and toks_b.
+    * `sides` is persisted: the two join sides are separate subtrees that
+    * would otherwise each compute it. */
+  private[queries] def verifyPairs(pairs: DataFrame,
+                                   sides: DataFrame): DataFrame = {
+    val cached = sides.persist()
+    def side(sfx: String) = cached.select(cached.columns.toSeq.map(c =>
+      col(c).as(if (c == "doc_id") s"doc$sfx" else s"$c$sfx")): _*)
+    pairs.join(side("_a"), Seq("doc_a")).join(side("_b"), Seq("doc_b"))
+      .withColumn("inter_cnt",
+        size(array_intersect(col("toks_a"), col("toks_b"))).cast("long"))
+      .withColumn("union_cnt",
+        size(array_union(col("toks_a"), col("toks_b"))).cast("long"))
+  }
+
   /** Unigram-set Jaccard verification of the LSH candidate pairs (q12),
     * in exact integer arithmetic (emit intersection/union counts; the
     * ≥0.5 threshold is the integer comparison 2·|∩| ≥ |∪|). Verifying
@@ -110,23 +128,11 @@ object DedupOps {
     * r1 same-source self-join was O(Σ n_source²) — quadratic within each
     * source at scale. Each side of the pair joins back to its token
     * array by doc_id (equi-joins on unique keys, shuffle ∝ candidates). */
-  def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    // persisted: the a/b join sides are separate subtrees, so without
-    // the cache the split+distinct token table is computed once per side
-    val toks = docs(s, dir).select(col("doc_id"),
-      array_distinct(split(col("text"), " ")).as("toks")).persist()
-    lshCandidatePairs(s, dir)
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
-        Seq("doc_a"))
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("toks_a"), col("toks_b"))).cast("long")
-          .as("inter_cnt"),
-        size(array_union(col("toks_a"), col("toks_b"))).cast("long")
-          .as("union_cnt"))
+  def jaccardPairs(s: SparkSession, dir: String): DataFrame =
+    verifyPairs(lshCandidatePairs(s, dir), docs(s, dir).select(col("doc_id"),
+        array_distinct(split(col("text"), " ")).as("toks")))
+      .select("doc_a", "doc_b", "inter_cnt", "union_cnt")
       .filter(col("inter_cnt") * 2 >= col("union_cnt"))
-  }
 
   val jaccardPairsSql: String =
     s"""WITH pairs AS (${lshCandidatePairsSql.replace("\n", "\n  ")}),
@@ -160,26 +166,16 @@ object DedupOps {
     * arrays. */
   def minhashAudit(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    // persisted: consumed by both pair sides — minhash_sigs is the
-    // expensive expression and would otherwise run twice per doc
     val sides = docs(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), expr("minhash_sigs(toks)").as("sig"),
-        array_distinct(col("toks")).as("utoks"))
-      .persist()
-    lshCandidatePairs(s, dir)
-      .join(sides.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-        col("utoks").as("toks_a")), Seq("doc_a"))
-      .join(sides.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("utoks").as("toks_b")), Seq("doc_b"))
+        array_distinct(col("toks")).as("toks"))
+    verifyPairs(lshCandidatePairs(s, dir), sides)
       .select(col("doc_a"), col("doc_b"),
         expr("cast(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y)," +
           " v -> v)) as bigint)").as("match_fams"),
-        size(array_intersect(col("toks_a"), col("toks_b"))).cast("long")
-          .as("inter_cnt"),
-        size(array_union(col("toks_a"), col("toks_b"))).cast("long")
-          .as("union_cnt"))
+        col("inter_cnt"), col("union_cnt"))
       .withColumn("est_permille", col("match_fams") * 125)
       .withColumn("jacc_permille", expr("(inter_cnt * 1000) div union_cnt"))
       .withColumn("err_permille",
@@ -278,25 +274,18 @@ object DedupOps {
     * candidate-bounded; the matrix itself is |sources|²-bounded with
     * map-side combine. Source labels are normalized so (a,b) and (b,a)
     * land in one cell. */
-  def copyMatrix(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"),
-      col("source"), array_distinct(split(col("text"), " ")).as("toks"))
-      .persist() // both pair sides read it
-    lshCandidatePairs(s, dir)
-      .join(meta.select(col("doc_id").as("doc_a"),
-        col("source").as("src_a"), col("toks").as("toks_a")), Seq("doc_a"))
-      .join(meta.select(col("doc_id").as("doc_b"),
-        col("source").as("src_b"), col("toks").as("toks_b")), Seq("doc_b"))
+  def copyMatrix(s: SparkSession, dir: String): DataFrame =
+    verifyPairs(lshCandidatePairs(s, dir), docs(s, dir).select(col("doc_id"),
+        col("source").as("src"), array_distinct(split(col("text"), " "))
+          .as("toks")))
       .select(
         least(col("src_a"), col("src_b")).as("source_a"),
         greatest(col("src_a"), col("src_b")).as("source_b"),
-        when(size(array_intersect(col("toks_a"), col("toks_b"))) * 2 >=
-             size(array_union(col("toks_a"), col("toks_b"))), 1L)
+        when(col("inter_cnt") * 2 >= col("union_cnt"), 1L)
           .otherwise(0L).as("is_dup"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).cast("long").as("n_candidates"),
         sum(col("is_dup")).cast("long").as("n_dups"))
-  }
 
   val copyMatrixSql: String =
     s"""WITH pairs AS (${lshCandidatePairsSql.replace("\n", "\n  ")}),
@@ -449,23 +438,12 @@ object DedupOps {
     * are never shuffled; the batch-side token join shuffles ∝ batch +
     * candidates. Exact integer arithmetic as in q13 (≥0.5 ⇔ 2·|∩| ≥ |∪|). */
   def incrJaccardVerify(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
     val cand = incrLshCandidates(s, dir)
-    // one persisted token table; the corpus/batch sides are rename-only
-    // projections of the cache (split+distinct would otherwise run twice)
-    val toks = d.select(col("doc_id"),
-      array_distinct(split(col("text"), " ")).as("t")).persist()
-    val corpusToks = toks.select(col("doc_id").as("corpus_doc"),
-      col("t").as("toks_c"))
-    val batchToks = toks.select(col("doc_id").as("batch_doc"),
-      col("t").as("toks_b"))
-    corpusToks.join(broadcast(cand), Seq("corpus_doc"))
-      .join(batchToks, Seq("batch_doc"))
-      .select(col("batch_doc"), col("corpus_doc"),
-        size(array_intersect(col("toks_b"), col("toks_c"))).cast("long")
-          .as("inter_cnt"),
-        size(array_union(col("toks_b"), col("toks_c"))).cast("long")
-          .as("union_cnt"))
+      .select(col("corpus_doc").as("doc_a"), col("batch_doc").as("doc_b"))
+    verifyPairs(broadcast(cand), docs(s, dir).select(col("doc_id"),
+        array_distinct(split(col("text"), " ")).as("toks")))
+      .select(col("doc_b").as("batch_doc"), col("doc_a").as("corpus_doc"),
+        col("inter_cnt"), col("union_cnt"))
       .filter(col("inter_cnt") * 2 >= col("union_cnt"))
   }
 
@@ -515,7 +493,6 @@ object DedupOps {
     * plans never nest across iterations (the Lloyd-chain lesson of
     * q37). */
   private[queries] def components(pairs: DataFrame): DataFrame = {
-    val verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")
     // ONE generator emits both directions PLUS a self-loop per endpoint
     // (duplicated self-loops are harmless under the min-aggregation):
     //  - the r5 spelling mirrored the pair list with a self-UNION, which
@@ -574,7 +551,6 @@ object DedupOps {
       done = s == null || (prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
       labels = next
-      if (verbose) println(s"[components] round sum=$s done=$done")
     }
     edges.unpersist()
     labels.select(col("doc_id"), col("label").as("rep_id"),
@@ -647,24 +623,6 @@ object DedupOps {
       |    AS BIGINT) AS simhash
       |FROM bits GROUP BY 1""".stripMargin
 
-  /** q44: cross-document duplicated-SPAN coverage — the exact-substring
-    * dedup family member (the MassiveText/"Deduplicating Training Data
-    * Makes Language Models Better" shape, word-gram approximated): an
-    * 8-token gram occurring in ≥2 distinct documents is a duplicated
-    * span; per document, report how many token positions any such span
-    * covers, in exact permille. q26 scores WITHIN-doc repetition and q27
-    * checks grams against an EXTERNAL benchmark; this is the
-    * corpus-internal cross-doc case that span-removal dedup acts on.
-    *
-    * Scale shape: grams never shuffle as text — every group/join key is
-    * the fixed-width md5 hex of the gram (32 chars vs an unbounded
-    * 8-gram; at 10^10 docs a production run would widen to 128-bit
-    * binary, which md5 already is). The duplicated-gram set can itself be
-    * corpus-scale, so its join back to occurrences is an equi-join on the
-    * hash (shuffle-partitioned both sides, AQE may broadcast when small)
-    * — never a cartesian. Coverage explodes each surviving occurrence to
-    * its 8 positions and distinct-counts per doc: all group-bys combine
-    * map-side on (doc, key) pairs bounded by document length. */
   /** Shared gram-occurrence stream of the exact-substring family
     * (q44/q67/q84/q85): one (doc_id, start, gram-md5) row per 8-token
     * gram. Narrow scan→generate — the md5 hex is the ONLY gram
@@ -692,17 +650,20 @@ object DedupOps {
     .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
     .filter(col("mn") =!= col("mx")).select("gh")
 
-  /** Per-doc MERGED maximal duplicated spans, computed from dup-gram
-    * START positions only: coverage is ∪[i, i+7] over surviving starts,
-    * so two grams chain one run iff the next start is within 8 of the
-    * previous, and a run covering [s ..] ends at (last start in run)+7.
-    * The r5 spelling exploded every start to its 8 covered positions
-    * before the per-doc aggregate (8× the exchange rows + an array_sort
-    * over the 8×-larger covered set); starts alone carry the same
-    * information. Output: (doc_id, ss[], es[]) with ss/es pairing
-    * positionally into disjoint ascending (start, end) spans. */
-  private def mergedSpans(occ: DataFrame, dup: DataFrame): DataFrame =
-    occ.join(dup, "gh")
+  /** Per-doc MERGED maximal duplicated spans of the exact-substring
+    * family, computed from dup-gram START positions only: coverage is
+    * ∪[i, i+7] over surviving starts, so two grams chain one run iff the
+    * next start is within 8 of the previous, and a run covering [s ..]
+    * ends at (last start in run)+7. The r5 spelling exploded every start
+    * to its 8 covered positions before the per-doc aggregate (8× the
+    * exchange rows + an array_sort over the 8×-larger covered set);
+    * starts alone carry the same information. `base` is (doc_id, toks);
+    * output: (doc_id, ss[], es[]) with ss/es pairing positionally into
+    * disjoint ascending (start, end) spans, one row per doc with at least
+    * one duplicated gram. */
+  private def dupSpanTable(base: DataFrame): DataFrame = {
+    val occ = gramOcc(base)
+    occ.join(dupGrams(occ), "gh")
       .groupBy("doc_id").agg(collect_set(col("i")).as("st0"))
       .withColumn("st", array_sort(col("st0")))
       .withColumn("ss", expr(
@@ -713,23 +674,64 @@ object DedupOps {
         "filter(transform(st, (x, j) ->" +
           " IF(j = size(st) - 1 OR element_at(st, j + 2) - 8 > x," +
           " x + 7, null)), v -> v IS NOT NULL)"))
-      .drop("st0")
+      .select("doc_id", "ss", "es")
+  }
 
-  def dupSpans(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val occ = gramOcc(
+  /** Tokens covered by a span list — merged spans are disjoint, so the
+    * distinct covered positions are the sum of the span lengths. */
+  private val spanCov =
+    "aggregate(zip_with(ss, es, (a, b) -> b - a + 1), 0L, (acc, x) -> acc + x)"
+
+  /** Every document of `d` with its token count and the `stats` columns
+    * computed over its merged-span row (null where the document has no
+    * duplicated span) — q44 and q84. */
+  private def spanStats(d: DataFrame, stats: Column*): DataFrame = {
+    val spans = dupSpanTable(
       d.select(col("doc_id"), split(col("text"), " ").as("toks")))
-    // merged spans are disjoint, so distinct covered positions = Σ lengths
-    val cov = mergedSpans(occ, dupGrams(occ))
-      .select(col("doc_id"),
-        expr("aggregate(zip_with(ss, es, (a, b) -> b - a + 1)," +
-          " 0L, (acc, x) -> acc + x)").as("dup_cov"))
     d.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .join(cov, Seq("doc_id"), "left")
+      .join(spans.select(col("doc_id") +: stats: _*), Seq("doc_id"), "left")
+  }
+
+  /** The exact-substring scrub of q67 and q85: `base` (doc_id, toks, ...)
+    * plus n_tokens, kept_tokens and the md5 of the text left once the
+    * tokens inside every span [ss(k), es(k)] are removed (`ss`/`es` are
+    * SQL expressions over `base`, null without spans). Kept = the gaps
+    * [prev_end+1, next_start-1] BETWEEN the spans, sentinels 1 and n+1,
+    * rebuilt by O(spans) positional slices, not a per-TOKEN lambda. */
+  private def scrub(base: DataFrame, ss: String, es: String): DataFrame =
+    base
+      .withColumn("n_tokens", size(col("toks")).cast("long"))
+      .withColumn("kept", expr(s"CASE WHEN $ss IS NULL THEN toks ELSE" +
+        " flatten(zip_with(" +
+        s" concat(array(1), transform($es, x -> x + 1))," +
+        s" concat($ss, array(size(toks) + 1))," +
+        " (a, b) -> slice(toks, a, b - a))) END"))
+      .withColumn("kept_tokens", size(col("kept")).cast("long"))
+      .withColumn("scrub_md5", md5(concat_ws(" ", col("kept"))))
+
+  /** q44: cross-document duplicated-SPAN coverage — the exact-substring
+    * dedup family member (the MassiveText/"Deduplicating Training Data
+    * Makes Language Models Better" shape, word-gram approximated): an
+    * 8-token gram occurring in ≥2 distinct documents is a duplicated
+    * span; per document, report how many token positions any such span
+    * covers, in exact permille. q26 scores WITHIN-doc repetition and q27
+    * checks grams against an EXTERNAL benchmark; this is the
+    * corpus-internal cross-doc case that span-removal dedup acts on.
+    *
+    * Scale shape: grams never shuffle as text — every group/join key is
+    * the fixed-width md5 hex of the gram (32 chars vs an unbounded
+    * 8-gram; at 10^10 docs a production run would widen to 128-bit
+    * binary, which md5 already is). The duplicated-gram set can itself be
+    * corpus-scale, so its join back to occurrences is an equi-join on the
+    * hash (shuffle-partitioned both sides, AQE may broadcast when small)
+    * — never a cartesian. Coverage explodes each surviving occurrence to
+    * its 8 positions and distinct-counts per doc: all group-bys combine
+    * map-side on (doc, key) pairs bounded by document length. */
+  def dupSpans(s: SparkSession, dir: String): DataFrame =
+    spanStats(docs(s, dir), expr(spanCov).as("dup_cov"))
       .withColumn("dup_cov", coalesce(col("dup_cov"), lit(0L)))
       .withColumn("dup_permille", expr("(dup_cov * 1000) div n_tokens"))
-  }
 
   val dupSpansSql: String =
     """WITH occ AS (
@@ -778,26 +780,11 @@ object DedupOps {
   def exactScrub(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val occ = gramOcc(base)
-    // a position is covered iff it falls inside a merged span — O(spans)
-    // exists() per token against the doc's own span list (the r5 shape
-    // probed an O(covered-positions) unsorted set per token)
-    val spans = mergedSpans(occ, dupGrams(occ)).select("doc_id", "ss", "es")
-    // kept = the gap segments BETWEEN merged spans, rebuilt by O(spans)
-    // positional slices — the r5 spelling ran an interpreted filter()
-    // lambda per TOKEN probing the covered set; gaps are [prev_end+1,
-    // next_start-1] with sentinels 1 and n+1, empty slices vanish
-    base.join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        expr("CASE WHEN ss IS NULL THEN toks ELSE" +
-          " flatten(zip_with(" +
-          " concat(array(1), transform(es, x -> x + 1))," +
-          " concat(ss, array(size(toks) + 1))," +
-          " (a, b) -> slice(toks, a, b - a))) END").as("kept"))
-      .select(col("doc_id"), col("n_tokens"),
-        size(col("kept")).cast("long").as("kept_tokens"),
-        md5(concat_ws(" ", col("kept"))).as("scrub_md5"))
+    // a position is covered iff it falls inside a merged span, so the
+    // scrub needs only the doc's own span list (the r5 shape probed an
+    // O(covered-positions) unsorted set per token)
+    scrub(base.join(dupSpanTable(base), Seq("doc_id"), "left"), "ss", "es")
+      .select("doc_id", "n_tokens", "kept_tokens", "scrub_md5")
   }
 
   /** q84: maximal duplicated SPANS — the length-extension over q44/q67's
@@ -815,30 +802,21 @@ object DedupOps {
     * per doc with no window, no per-doc sort exchange, no token-level
     * join (the oracle spells the same merge relationally as
     * gaps-and-islands; the engine never does). */
-  def dupMaxSpans(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val occ = gramOcc(
-      d.select(col("doc_id"), split(col("text"), " ").as("toks")))
-    val spans = mergedSpans(occ, dupGrams(occ))
-      .select(col("doc_id"),
+  def dupMaxSpans(s: SparkSession, dir: String): DataFrame =
+    spanStats(docs(s, dir),
         size(col("ss")).cast("long").as("n_spans"),
         expr("array_max(zip_with(ss, es, (s, e) -> e - s + 1))")
           .cast("long").as("max_span"),
-        expr("aggregate(zip_with(ss, es, (a, b) -> b - a + 1)," +
-          " 0L, (acc, x) -> acc + x)").as("span_cov"),
+        expr(spanCov).as("span_cov"),
         md5(concat_ws(" ", expr(
           "zip_with(ss, es, (s, e) ->" +
             " concat(cast(s as string), '-', cast(e as string)))")))
           .as("spans_md5"))
-    d.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("max_span"), lit(0L)).as("max_span"),
         coalesce(col("span_cov"), lit(0L)).as("span_cov"),
         coalesce(col("spans_md5"), md5(lit(""))).as("spans_md5"))
-  }
 
   /** q85 span-length floor: only maximal duplicated spans of at least
     * this many tokens are scrubbed (Lee et al. 2021 remove ~50-byte
@@ -866,10 +844,9 @@ object DedupOps {
     * exists(), never a token-level join), so the threshold adds ZERO
     * exchanges over q84. */
   def longSpanScrub(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val base = d.select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val occ = gramOcc(base)
-    val spans = mergedSpans(occ, dupGrams(occ))
+    val base = docs(s, dir)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val spans = dupSpanTable(base)
       // merged maximal spans are disjoint by construction, so the long
       // subset's coverage is a plain sum of lengths
       .withColumn("ls", expr(
@@ -881,21 +858,12 @@ object DedupOps {
         expr("aggregate(ls, 0L, (acc, x) -> acc + x.e - x.s + 1)")
           .cast("long").as("long_cov"),
         col("ls"))
-    base.join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
+    scrub(base.join(spans, Seq("doc_id"), "left"),
+        "transform(ls, x -> x.s)", "transform(ls, x -> x.e)")
+      .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_long_spans"), lit(0L)).as("n_long_spans"),
         coalesce(col("long_cov"), lit(0L)).as("long_cov"),
-        // gap-slice rebuild over the LONG spans only (q67's idiom)
-        expr("CASE WHEN ls IS NULL THEN toks ELSE" +
-          " flatten(zip_with(" +
-          " concat(array(1), transform(ls, x -> x.e + 1))," +
-          " concat(transform(ls, x -> x.s), array(size(toks) + 1))," +
-          " (a, b) -> slice(toks, a, b - a))) END").as("kept"))
-      .select(col("doc_id"), col("n_tokens"), col("n_long_spans"),
-        col("long_cov"),
-        size(col("kept")).cast("long").as("kept_tokens"),
-        md5(concat_ws(" ", col("kept"))).as("scrub_md5"))
+        col("kept_tokens"), col("scrub_md5"))
   }
 
   val longSpanScrubSql: String =

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,16 +26,12 @@ object TextOps {
     size(filter(col(toks), t =>
       t.isin(words.map(lit(_).cast("string")): _*))).cast("long")
 
-  /** Language-ID: stopword-hit counts per candidate language + argmax
-    * guess (ties → 'und'). */
-  def langId(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .select(col("doc_id"), col("lang"),
-        split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("lang"),
-        hits("toks", en).as("en_hits"),
-        hits("toks", de).as("de_hits"),
-        hits("toks", es).as("es_hits"))
+  /** `cols` of `df` plus the stopword-hit counts over its `toks` per
+    * candidate language (en_hits, de_hits, es_hits) and their argmax
+    * `guess` (ties → 'und') — the language-ID columns of q20 and q25. */
+  private def withLangGuess(df: DataFrame, cols: Column*): DataFrame =
+    df.select(cols ++ Seq(hits("toks", en).as("en_hits"),
+        hits("toks", de).as("de_hits"), hits("toks", es).as("es_hits")): _*)
       .withColumn("guess",
         when(col("en_hits") > col("de_hits") &&
              col("en_hits") > col("es_hits"), "en")
@@ -44,6 +40,12 @@ object TextOps {
           .when(col("es_hits") > col("en_hits") &&
                 col("es_hits") > col("de_hits"), "es")
           .otherwise("und"))
+
+  /** Language-ID: stopword-hit counts per candidate language + argmax
+    * guess (ties → 'und'). */
+  def langId(s: SparkSession, dir: String): DataFrame =
+    withLangGuess(docs(s, dir).select(col("doc_id"), col("lang"),
+      split(col("text"), " ").as("toks")), col("doc_id"), col("lang"))
 
   val langIdSql: String =
     """SELECT doc_id, lang, en_hits, de_hits, es_hits,
@@ -163,24 +165,13 @@ object TextOps {
     * content hash + language guess + quality verdict. Pure codegen'd
     * projection — no shuffle, usable on a micro-batch unchanged. */
   private[graft] def cleanFeatures(docsDf: DataFrame): DataFrame =
-    docsDf
+    withLangGuess(docsDf
       .select(col("doc_id"), col("lang"), col("source"),
         substring(sha2(col("text"), 256), 1, 32).as("text_hash"),
-        split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("lang"), col("source"), col("text_hash"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        size(array_distinct(col("toks"))).cast("long").as("n_distinct"),
-        hits("toks", en).as("en_hits"),
-        hits("toks", de).as("de_hits"),
-        hits("toks", es).as("es_hits"))
-      .withColumn("guess",
-        when(col("en_hits") > col("de_hits") &&
-             col("en_hits") > col("es_hits"), "en")
-          .when(col("de_hits") > col("en_hits") &&
-                col("de_hits") > col("es_hits"), "de")
-          .when(col("es_hits") > col("en_hits") &&
-                col("es_hits") > col("de_hits"), "es")
-          .otherwise("und"))
+        split(col("text"), " ").as("toks")),
+      col("doc_id"), col("lang"), col("source"), col("text_hash"),
+      size(col("toks")).cast("long").as("n_tokens"),
+      size(array_distinct(col("toks"))).cast("long").as("n_distinct"))
       .withColumn("ttr_permille", expr("(n_distinct * 1000) div n_tokens"))
       .withColumn("keep",
         (col("guess") =!= "und" && col("ttr_permille") >= 200 &&
