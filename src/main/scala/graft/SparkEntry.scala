@@ -32,9 +32,11 @@ object SparkEntry {
   private def crawlTrace(spark: SparkSession, rounds: Int): DataFrame = {
     val drv = new CrawlDriver(spark, FixtureWeb.config(),
       CrawlRound.webFromMap(spark, FixtureWeb.generate()), store = None)
-    drv.seed(FixtureWeb.seeds, TraceT0 - 1)
-    drv.run(TraceT0, rounds)
-    drv.traceAll.toDF()
+    try {
+      drv.seed(FixtureWeb.seeds, TraceT0 - 1)
+      drv.run(TraceT0, rounds)
+      drv.traceAll.toDF()
+    } finally drv.close()
   }
 
   /** The q00 oracle: the same crawl replayed on the pure-Scala serial

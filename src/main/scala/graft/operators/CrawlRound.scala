@@ -322,11 +322,9 @@ object CrawlRound {
       roundLeaves.last
     }
     val stepOuts = roundLeaf(outs.toDF())
-    val verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")
     val t0 = System.nanoTime()
     val picksCount = graft.tables.StateLeaf.countRows(Seq(stepOuts)).head
     val fetchPhaseSec = (System.nanoTime() - t0) / 1e9
-    if (verbose) println(f"[round-timing]   fetch+process: $fetchPhaseSec%.2fs")
 
     // --- 4. state-update deltas (column-pruned reads of the cache) -------
     val updatedF = stepOuts.select($"newF.*").as[FrontierEntry]

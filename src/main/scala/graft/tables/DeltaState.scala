@@ -1,8 +1,73 @@
 package graft.tables
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+
+/**
+ * One durable crawl table (frontier, hosts, fetch_log, extracted, pages):
+ * its in-memory state plus what it has staged for the next snapshot
+ * commit. Each table owns its snapshot name, key columns and COW bucket
+ * column, and keeps the ORDERED parts it changed since the last checkpoint
+ * (the order is the last-writer-wins priority the commit resolves keys by)
+ * with the buckets those parts touch. A checkpoint ships the parts as the
+ * table's [[SnapshotStore.CowDelta]] — references to already-materialized
+ * deltas, no extra job — and the store merges them with ONLY the changed
+ * buckets' previous files.
+ *
+ * An untracked table (a driver with no snapshot store) stages nothing, so
+ * it holds no references to past round leaves.
+ */
+trait CrawlTable[T] {
+  protected def spark: SparkSession
+  protected implicit def enc: Encoder[T]
+  /** Stage changes for snapshot commits? */
+  protected def track: Boolean
+
+  def name: String
+  def keyCols: Seq[String]
+  /** Int COW bucket of a row, over the table's columns. */
+  def bucketCol: Column
+  def view: Dataset[T]
+  def needsCompaction: Boolean
+  def compact(): Unit
+  /** Replace the state with the table's content at `snap`. */
+  def restore(store: SnapshotStore, snap: SnapshotStore.Snapshot): Unit
+  /** Manifest metrics the table contributes to a commit. */
+  def metrics: Map[String, Long] = Map.empty
+
+  private var pending: Vector[Dataset[T]] = Vector.empty
+  private var pendingBuckets: Set[Int]    = Set.empty
+
+  def hasPending: Boolean = pending.nonEmpty
+
+  /** Stage materialized delta parts, in priority order, with the buckets
+    * they touch. `buckets` is only evaluated for a tracked table. */
+  def stage(parts: Seq[Dataset[T]], buckets: => Set[Int]): Unit =
+    if (track) {
+      pending ++= parts
+      pendingBuckets ++= buckets
+    }
+
+  /** Stage one driver-initiated delta (seeds, mq transitions, partition
+    * labels): its buckets come from one narrow job over just its rows. */
+  protected def stage(delta: Dataset[T]): Unit =
+    stage(Seq(delta), delta.select(bucketCol).distinct().collect()
+      .map(_.getInt(0)).toSet)
+
+  def cowDelta: SnapshotStore.CowDelta = SnapshotStore.CowDelta(
+    pending.map(_.toDF().withColumn("bucket", bucketCol)), keyCols,
+    pendingBuckets)
+
+  def clearPending(): Unit = {
+    pending = Vector.empty
+    pendingBuckets = Set.empty
+  }
+
+  protected def readSnapshot(store: SnapshotStore,
+                             snap: SnapshotStore.Snapshot): Dataset[T] =
+    StateLeaf.eagerLeaf(
+      store.readCow(spark, snap, name, enc.schema).as[T](enc))
+}
 
 /**
  * Incremental keyed-table state: an immutable materialized `base`, a
@@ -24,9 +89,20 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
  * SnapshotStore applies on disk. The reference's equivalent is the DB's
  * row-level UPDATE/INSERT against indexed tables (db.c:944-1294): O(row)
  * per change, periodic page compaction handled by InnoDB.
+ *
+ * `rowsMetric` names the manifest metric that records the row count, so a
+ * restore needs no counting job.
  */
-final class DeltaState[T](spark: SparkSession, keyCol: String)
-                         (implicit enc: Encoder[T]) {
+final class DeltaState[T](
+    protected val spark: SparkSession,
+    val name: String,
+    keyCol: String,
+    val bucketCol: Column,
+    rowsMetric: String,
+    protected val track: Boolean)
+    (implicit protected val enc: Encoder[T]) extends CrawlTable[T] {
+
+  def keyCols: Seq[String] = Seq(keyCol)
 
   var base: Dataset[T]            = spark.emptyDataset[T](enc)
   var overlay: Dataset[T]         = spark.emptyDataset[T](enc)
@@ -37,6 +113,8 @@ final class DeltaState[T](spark: SparkSession, keyCol: String)
 
   /** Total distinct keys (the overlay only replaces existing rows). */
   def rows: Long = baseRows + insertRows
+
+  override def metrics: Map[String, Long] = Map(rowsMetric -> rows)
 
   private def allBaseAndInserts: Dataset[T] =
     StateLeaf.union(if (baseRows == 0 && inserts.nonEmpty) inserts
@@ -84,6 +162,22 @@ final class DeltaState[T](spark: SparkSession, keyCol: String)
   def addInserts(delta: Dataset[T], n: Long): Unit =
     if (n > 0) { inserts :+= delta; insertRows += n }
 
+  /** Driver-initiated replace-by-key update (force seed, mq transition,
+    * partition label): fold it into the overlay now and stage it — without
+    * the stage, a carried-forward bucket pointer would drop the change
+    * from the next snapshot. */
+  def update(delta: Dataset[T]): Unit = {
+    val o = StateLeaf.lazyLeaf(composeOverlay(delta))
+    swapOverlay(o, o.count())
+    stage(delta)
+  }
+
+  /** Driver-initiated insert of a counted leaf (seeds), staged. */
+  def insert(delta: Dataset[T], n: Long): Unit = {
+    addInserts(delta, n)
+    stage(delta)
+  }
+
   /** Replace everything with a materialized base (seed bulk-load, resume,
     * compaction). */
   def setBase(b: Dataset[T], n: Long): Unit = {
@@ -95,6 +189,11 @@ final class DeltaState[T](spark: SparkSession, keyCol: String)
     inserts = Vector.empty
     overlayRows = 0L
     insertRows = 0L
+  }
+
+  def restore(store: SnapshotStore, snap: SnapshotStore.Snapshot): Unit = {
+    val b = readSnapshot(store, snap)
+    setBase(b, snap.metrics.getOrElse(rowsMetric, b.count()))
   }
 
   /** Compact when the overlay outgrows its broadcast budget (1M keys /
@@ -122,25 +221,22 @@ final class DeltaState[T](spark: SparkSession, keyCol: String)
  * so the window shuffle never sits in the round's hot path; the round
  * itself only appends.
  */
-final class AppendState[T](spark: SparkSession, keyCol: String)
-                          (implicit enc: Encoder[T]) {
+final class AppendState[T](
+    protected val spark: SparkSession,
+    val name: String,
+    keyCol: String,
+    val bucketCol: Column,
+    protected val track: Boolean)
+    (implicit protected val enc: Encoder[T]) extends CrawlTable[T] {
+
+  def keyCols: Seq[String] = Seq(keyCol)
 
   var base: Dataset[T]          = spark.emptyDataset[T](enc)
   var parts: Vector[Dataset[T]] = Vector.empty
 
   def view: Dataset[T] =
     if (parts.isEmpty) base
-    else {
-      val all = (base.toDF.withColumn("_pi", lit(0)) +:
-        parts.zipWithIndex.map { case (p, i) =>
-          p.toDF.withColumn("_pi", lit(i + 1))
-        }).reduce(_ unionByName _)
-      val w = Window.partitionBy(col(keyCol)).orderBy(col("_pi").desc)
-      all.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_pi", "_rn")
-        .as[T](enc)
-    }
+    else lastWriterWins((base +: parts).map(_.toDF()), keyCols).as[T](enc)
 
   def append(delta: Dataset[T]): Unit = parts :+= delta
 
@@ -149,6 +245,9 @@ final class AppendState[T](spark: SparkSession, keyCol: String)
     base = b
     parts = Vector.empty
   }
+
+  def restore(store: SnapshotStore, snap: SnapshotStore.Snapshot): Unit =
+    setBase(readSnapshot(store, snap))
 
   def needsCompaction: Boolean = parts.size > 24
 

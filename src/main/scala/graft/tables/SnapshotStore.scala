@@ -3,8 +3,7 @@ package graft.tables
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -128,13 +127,13 @@ object SnapshotStore {
       metrics: Map[String, Long])
 
   /** A keyed table's pending changes for one commit:
-    *  - `delta`: the table's changed rows ONLY (all pending update/insert
-    *    parts), carrying an int `bucket` column and an int `_pi` priority
-    *    column (higher wins — later parts override earlier ones);
+    *  - `parts`: the table's changed rows ONLY (its pending update/insert
+    *    parts in order — later parts override earlier ones), each
+    *    carrying an int `bucket` column;
     *  - `keyCols`: the replace-by-key identity;
     *  - `changedBuckets`: buckets with ≥1 delta row (drives both the COW
     *    rewrite set and which previous bucket files are read back). */
-  final case class CowDelta(delta: DataFrame, keyCols: Seq[String],
+  final case class CowDelta(parts: Seq[DataFrame], keyCols: Seq[String],
                             changedBuckets: Set[Int])
 }
 
@@ -211,8 +210,8 @@ final class SnapshotStore(val io: SnapshotIO) {
 
   /**
    * Commit one snapshot. For each COW table, the changed buckets' new
-   * content = previous bucket files (priority 0) ∪ pending delta parts
-   * (priority = part ordinal), resolved last-writer-wins per key — the
+   * content = previous bucket files, then the pending delta parts in
+   * order, resolved last-writer-wins per key (`lastWriterWins`) — the
    * read side touches only the CHANGED buckets of the previous snapshot,
    * never a full table view. Untouched buckets carry their file pointers
    * forward. Append tables get their new files appended. The manifest is
@@ -228,18 +227,18 @@ final class SnapshotStore(val io: SnapshotIO) {
     val version = prev.map(_.version + 1).getOrElse(1)
     val prevReads = Map.newBuilder[String, Seq[String]]
 
-    val cow = cowDeltas.map { case (table, CowDelta(delta, keyCols, changed)) =>
+    val cow = cowDeltas.map { case (table, CowDelta(parts, keyCols, changed)) =>
       val prevBuckets = prev.flatMap(_.cow.get(table)).getOrElse(Map.empty)
       val newBuckets =
         if (changed.isEmpty) prevBuckets
         else {
           val relDir = s"data/$table/" + f"v$version%06d"
           val dir = io.resolve(relDir)
-          val spark = delta.sparkSession
-          val rowCols = delta.columns.filterNot(c => c == "bucket" || c == "_pi")
+          val spark = parts.head.sparkSession
+          val rowCols = parts.head.columns.filterNot(_ == "bucket")
           // the delta's row schema is the bucket files' schema: reading
           // with it skips one schema-inference job per bucket file
-          val rowSchema = StructType(delta.schema.filter(f =>
+          val rowSchema = StructType(parts.head.schema.filter(f =>
             rowCols.contains(f.name)))
           // previous content of ONLY the changed buckets (bucket value is a
           // partition dir in the manifest, not a file column — re-attach it)
@@ -250,20 +249,14 @@ final class SnapshotStore(val io: SnapshotIO) {
             spark.read.schema(rowSchema).parquet(p)
               .select(rowCols.map(col).toIndexedSeq: _*)
               .withColumn("bucket", lit(b))
-              .withColumn("_pi", lit(0))
           }.reduceOption(_ unionByName _)
-          val all = prevDf.map(_.unionByName(delta)).getOrElse(delta)
-          val w = Window.partitionBy(keyCols.map(col).toIndexedSeq: _*)
-            .orderBy(col("_pi").desc)
           // mode overwrite = crash-retry safety: a commit that wrote data
           // but died before the manifest PUT leaves orphan dirs at THIS
           // version; the retry (same version — the manifest was never
           // published, so the number can't have been claimed) overwrites
           // them. Published versions are never rewritten: the manifest
           // publish is a conditional PUT, so a version name is won once.
-          all.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1)
-            .drop("_pi", "_rn")
+          lastWriterWins(prevDf.toSeq ++ parts, keyCols)
             .write.mode("overwrite").partitionBy("bucket").parquet(dir)
           // an empty bucket writes no directory — drop its pointer
           val written = changed.filter(b => io.exists(s"$relDir/bucket=$b"))

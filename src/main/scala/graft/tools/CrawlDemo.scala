@@ -44,6 +44,8 @@ object CrawlDemo {
     println(s"[demo] resume=$ok seq=${drv2.seq} " +
       s"seenSetEqual=${drv2.seenSet == drv.seenSet} " +
       s"traceEqual=${drv2.traceRows == drv.traceRows}")
+    drv.close()
+    drv2.close()
     spark.stop()
   }
 }

@@ -36,6 +36,7 @@ object PipelineDemo {
 
     // --- 2. bridge to the documents shape ------------------------------
     CorpusBridge.writeDocuments(drv.extracted, outDir)
+    drv.close()
     val docs = spark.read.parquet(s"$outDir/documents.parquet")
     println(s"[pipeline] bridge: ${docs.count()} documents at " +
       s"$outDir/documents.parquet")

@@ -96,6 +96,7 @@ object PlanDump {
       "step output — the wide text/body/outlinks columns are not " +
       "read here.", res.updatedFrontier)
     res.cleanup()
+    drv.close()
 
     // --- headline pipeline-query plans (the shapes PlanSpec enforces) ----
     val sf = "/root/testdata/sf0.001"

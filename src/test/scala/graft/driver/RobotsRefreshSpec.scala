@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import graft.SparkTestBase
 import graft.core.{CrawlConfig, CrawlState, Step}
 import graft.operators.CrawlRound
+import org.apache.spark.sql.graft.SparkInternals
 
 /**
  * TTL'd robots-slice refresh (VERDICT r3 ask #7): the robots gate input
@@ -103,6 +104,19 @@ class RobotsRefreshSpec extends SparkTestBase {
     assert(st(page("a3.ttl")) == CrawlState.Rejected,
       "at exactly +86400 the refreshed (disallowing) rules are in force — " +
       "pins the DEFAULT robotsTtl at one logical day")
+  }
+
+  test("close() releases the persisted robots slice: the cache manager " +
+       "is empty afterwards") {
+    spark.catalog.clearCache()
+    val d = new CrawlDriver(spark, cfg,
+      CrawlRound.webFromMap(spark, web(AllowAll)), store = None)
+    d.seed(Seq(page("a0.ttl")), T0 - 1)
+    d.run(T0, 1)
+    assert(SparkInternals.cachedPlans(spark) > 0,
+      "the robots slice is persisted while the driver runs")
+    d.close()
+    assert(SparkInternals.cachedPlans(spark) == 0)
   }
 
   test("an unblocking change also lands at the refresh boundary") {

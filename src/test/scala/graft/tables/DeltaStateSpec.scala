@@ -1,5 +1,6 @@
 package graft.tables
 
+import org.apache.spark.sql.functions.lit
 import graft.SparkTestBase
 
 /** The incremental-state algebra the whole driver rests on: the view must
@@ -14,7 +15,8 @@ class DeltaStateSpec extends SparkTestBase {
   type Row = KV
   private def Row(k: String, v: Int) = KV(k, v)
 
-  private def state() = new DeltaState[Row](spark, "k")
+  private def state() =
+    new DeltaState[Row](spark, "kv", "k", lit(0), "kv_rows", track = false)
 
   private def viewMap(s: DeltaState[Row]): Map[String, Int] =
     s.view.collect().map(r => r.k -> r.v).toMap
@@ -64,7 +66,7 @@ class DeltaStateSpec extends SparkTestBase {
   }
 
   test("AppendState: last-writer-wins across parts, stable over compaction") {
-    val a = new AppendState[Row](spark, "k")
+    val a = new AppendState[Row](spark, "kv", "k", lit(0), track = false)
     a.setBase(Seq(Row("x", 1), Row("y", 1)).toDS().localCheckpoint(true))
     a.append(Seq(Row("x", 2), Row("z", 2)).toDS().localCheckpoint(true))
     a.append(Seq(Row("x", 3)).toDS().localCheckpoint(true))
