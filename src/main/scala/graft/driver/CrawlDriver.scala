@@ -1,13 +1,15 @@
 package graft.driver
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import org.apache.spark.sql.{Column, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
 import graft.core._
 import graft.functions.Urls
 import graft.operators.{CrawlRound, SeenFilter}
 import graft.operators.CrawlRound.{CacheRow, ExtractedRow, PageStoreRow, TraceKeyed, WebRow}
-import graft.tables.{AppendState, CrawlTable, DeltaState, SnapshotStore}
+import graft.tables.{AppendState, CrawlTable, DeltaState, Fold, SnapshotStore, StateLeaf}
 
 /**
  * The crawl-loop driver — the Spark re-expression of the crawld daemon's
@@ -23,13 +25,16 @@ import graft.tables.{AppendState, CrawlTable, DeltaState, SnapshotStore}
  * O(fetched + discovered), never O(frontier). With a store, each table
  * also stages the parts it changed, and their buckets, until the next
  * checkpoint commits them; checkpoint, resume and compaction are loops
- * over the one table list. All of a round's deltas are leafed and
- * materialized by ONE counting job, which also yields their changed
- * buckets. That is not a round's whole cost: with AQE every exchange
- * and broadcast under a leaf runs as its own job when the leaf is built,
- * so the recrawl benchmark (1,000-host Zipf web, local[4]) measures 23.6
- * Spark jobs and 63 tasks a round (27.6 and 226 before the round's
- * generated code was made reusable and its leaves counted over row RDDs).
+ * over the one table list. Every change — a round, a seed, an mq
+ * transition, a partition label — takes one path: each touched table
+ * `fold`s its delta into leaves, ONE job (`countFolds`) counts them all
+ * and yields their changed buckets, the bloom merge follows, and only
+ * then are the folds applied: a failed count changes no table. That job
+ * is not a round's whole cost: with AQE every exchange and broadcast
+ * under a leaf runs as its own job when the leaf is built, so the recrawl
+ * benchmark (1,000-host Zipf web, local[4]) measures 23.6 Spark jobs and
+ * 63 tasks a round (27.6 and 226 before the round's generated code was
+ * made reusable and its leaves counted over row RDDs).
  *
  * Generated code is reused across rounds: per-round values reach it as
  * data (see CrawlRound), and the driver sets
@@ -49,10 +54,8 @@ final class CrawlDriver(
     checkpointEvery: Int = 1,
     /** Logical seconds between robots-slice refreshes. Default 86400 (one
       * logical day) per the RFC 9309 §2.4 cache-no-longer-than-24h
-      * expectation — a crawl that NEVER re-reads robots.txt (the pre-r5
-      * Long.MaxValue default) pins a host's rules for the crawl's life.
-      * Long.MaxValue = derive once, never refresh (opt-in, for fixtures
-      * that need a frozen gate). Pinned by RobotsRefreshSpec. */
+      * expectation. Long.MaxValue = derive once, never refresh (for
+      * fixtures that need a frozen gate). Pinned by RobotsRefreshSpec. */
     robotsTtl: Long = 86400L) {
 
   import spark.implicits._
@@ -95,23 +98,20 @@ final class CrawlDriver(
   private var snapshot: Option[SnapshotStore.Snapshot] = None
   private val bloom = new SeenFilter.SeenBloom()
 
-  /** The live web view — swappable mid-crawl (updateWeb) so tests and
-    * long-running deployments can model content changing under the
-    * crawler. Fetches see a swap on the NEXT ROUND (the round job reads
-    * this reference); the robots gate sees it on the next TTL REFRESH
-    * (see robotsSlice below) — deliberately different cadences. */
+  /** The live web view, swappable mid-crawl (updateWeb) to model content
+    * changing under the crawler. Fetches see a swap on the NEXT ROUND; the
+    * robots gate on its next TTL REFRESH (robotsSlice) — deliberately. */
   private var webNow: Dataset[WebRow] = web
   def updateWeb(w: Dataset[WebRow]): Unit = { webNow = w }
 
   /** Robots gate input, derived from the web view and persisted, then
-    * REFRESHED on a logical-clock TTL (`robotsTtl` seconds; default
-    * never) — robots bodies change on day scales, not round scales, so
-    * re-scanning the web/pages table every round is pure waste (r2
-    * verdict plan-audit note), but a cache with no refresh would pin a
-    * host's rules for the life of the crawl (VERDICT r3 ask #7). A robots
-    * change therefore takes effect at the next refresh, NOT the next
-    * round — RobotsRefreshSpec pins both sides. Never touched while the
-    * gate is off (the default). */
+    * REFRESHED on a logical-clock TTL (`robotsTtl` seconds) — robots
+    * bodies change on day scales, not round scales, so re-scanning the
+    * web every round is waste, but a cache with no refresh would pin a
+    * host's rules for the life of the crawl. A robots change therefore
+    * takes effect at the next refresh, NOT the next round —
+    * RobotsRefreshSpec pins both sides. Never touched while the gate is
+    * off (the default). */
   private var robotsCacheSlice: Option[Dataset[CrawlRound.RobotsRow]] = None
   private var robotsDerivedAt: Long = Long.MinValue
 
@@ -129,53 +129,32 @@ final class CrawlDriver(
       robotsCacheSlice
     }
 
-  // trace: keyed parts + per-round seq offsets; TraceRow.seq is derived
-  // lazily (rank by the A1 composite key within round + round offset) so
-  // the hot path never sorts
+  // trace: keyed parts, each row carrying its round's first seq;
+  // TraceRow.seq is derived lazily (rank by the A1 composite key within
+  // the round) so the hot path never sorts
   private var traceBase: Dataset[TraceRow] = spark.emptyDataset[TraceRow]
   private var traceParts: Vector[Dataset[TraceKeyed]] = Vector.empty
-  private var roundOffsets: Vector[(Int, Long)] = Vector.empty
 
   // pending-since-last-checkpoint beside the tables' own: the trace
   // append and the rounds' metrics
   private var pendingTraceParts: Vector[Dataset[TraceKeyed]] = Vector.empty
   private var pendingMetrics: Map[String, Long] = Map.empty
 
-  /** Where round deltas and cached step output live: OFF_HEAP when the
-    * session has an off-heap pool (the bench does) — the engine's retained
-    * state then never pressures the GC old generation, which otherwise
-    * costs 25-50% of a big sweep's wall in collector pauses; on-heap
-    * MEMORY_AND_DISK otherwise (tests, default sessions). */
-  private[graft] val stateLevel: org.apache.spark.storage.StorageLevel =
-    graft.tables.StateLeaf.levelFor(spark)
-
-  /** Plan-truncating state leaves (see [[graft.tables.StateLeaf]]).
-    * `.stateLeaf` is the lazy form (materializes in the round's one
-    * counting job); `.stateLeafEager` materializes before returning. */
-  private implicit class LeafOps[T](ds: Dataset[T]) {
-    def stateLeaf: Dataset[T] =
-      graft.tables.StateLeaf.lazyLeaf(ds, stateLevel)
-    def stateLeafEager: Dataset[T] =
-      graft.tables.StateLeaf.eagerLeaf(ds, stateLevel)
-  }
-
-  /** Leaf-finalization pool: with AQE on, a lazy localCheckpoint runs its
-    * plan's intermediate stages EAGERLY (AdaptiveSparkPlanExec
-    * .getFinalPhysicalPlan), so the ~12 per-round leafs finalized serially
-    * cost a scheduling gap per leaf — measured 1.5-5.5 s/round, the
-    * dominant share of the per-round fixed cost f that caps N-vs-4N
-    * scaling efficiency at (f + W/c)/(4f + W/c). The leafs are
-    * independent plans (fo/ho/lo depend only on fu/hu/lu's returned
-    * Dataset handles), so they finalize concurrently here — multi-thread
-    * job submission into one SparkContext is the supported pattern. One
-    * thread per leaf future a round submits. */
+  /** Leaf-finalization pool: with AQE on, building a lazy state leaf runs
+    * its plan's intermediate stages EAGERLY (see BatchedLeaf), so a
+    * round's leaves built serially cost a scheduling gap each — measured
+    * 1.5-5.5 s/round, the dominant share of a round's fixed cost. The
+    * leaves are independent plans (an overlay depends only on its update
+    * leaf's handle), so the tables' folds build them concurrently here.
+    * One thread per leaf future a round submits: update, overlay and
+    * insert of the three keyed tables, the two appended parts, the trace. */
   private val leafPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(12,
       (r: Runnable) => {
         val t = new Thread(r, "graft-leaf"); t.setDaemon(true); t
       })
-  private val leafEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(leafPool)
+  private implicit val leafEc: ExecutionContext =
+    ExecutionContext.fromExecutor(leafPool)
 
   /** Release driver-owned resources: the leaf pool and the persisted
     * robots slice. A JVM that creates many drivers (tests, benchmark runs)
@@ -193,6 +172,41 @@ final class CrawlDriver(
     val r  = f
     (r, (System.nanoTime() - t0) / 1e9)
   }
+
+  // ------------------------------------------------------- table changes
+
+  /** Wait for leaves building on the pool; a wedged leaf job surfaces as
+    * an error (a leaf finalizes in seconds, so 30 min is far past wedged). */
+  private def await[T](f: Future[T]): T =
+    try Await.result(f, Duration(30, "min"))
+    catch {
+      case e: java.util.concurrent.TimeoutException =>
+        throw new RuntimeException(
+          s"leaf finalization wedged >30min (round $roundNo)", e)
+    }
+
+  /** Count the folds' leaves, then `more` leaves, in ONE job: with a
+    * store through materializeAndCount, which also yields the staged
+    * parts' buckets; without one over the leaves' row RDDs, which compiles
+    * no scan classes. Returns the counts in leaf order, and the step that
+    * applies every fold with its share of the counts and buckets. */
+  private def countFolds(folds: Seq[Fold[_]], more: Dataset[_]*)
+      : (Seq[Long], () => Unit) = {
+    val leaves = folds.flatMap(_.leaves) ++ more.map(_ -> lit(0))
+    val (counts, buckets) =
+      if (track) materializeAndCount(leaves)
+      else (StateLeaf.countRows(leaves.map(_._1)),
+        leaves.map(_ => Set.empty[Int]))
+    (counts, () => folds.foldLeft(0) { (at, f) =>
+      val end = at + f.leaves.size
+      f.apply(counts.slice(at, end), buckets.slice(at, end))
+      end
+    })
+  }
+
+  /** A change between rounds (mq transition, partition label). */
+  private def change(fold: Future[Fold[_]]): Unit =
+    countFolds(Seq(await(fold)))._2()
 
   // ------------------------------------------------------------------ seeds
 
@@ -216,24 +230,23 @@ final class CrawlDriver(
       .flatMap(Step.newFrontierEntry(_, now, force))
       .dropDuplicates("url_hash")
     val fv = frontier
-    val ins = entries
-      .join(fv.select("url_hash"), Seq("url_hash"), "left_anti")
-      .as[FrontierEntry].stateLeaf
-    val insN = ins.count()
-    val insH = ins
-      .flatMap(e => Step.newHostEntry(e.url, now, bcCfg.value))
-      .dropDuplicates("root_hash")
-      .join(hosts.select("root_hash"), Seq("root_hash"), "left_anti")
-      .as[HostEntry].stateLeaf
-    val hN = insH.count()
     // J3 upsert: matched rows → overlay with next_fetch=now, state=FORCE
-    if (force) fState.update(fv
+    val forced = if (!force) None else Some(fv
       .join(entries.select("url_hash"), Seq("url_hash"), "left_semi")
       .as[FrontierEntry]
       .map(_.copy(next_fetch = now, state = CrawlState.Force)))
-    fState.insert(ins, insN)
-    hState.insert(insH, hN)
-    mergeBloomFrom(ins.select("url_hash").as[String], insN)
+    val f = await(fState.fold(forced, Some(entries
+      .join(fv.select("url_hash"), Seq("url_hash"), "left_anti")
+      .as[FrontierEntry])))
+    val ins = f.insert.get
+    val h = await(hState.fold(None, Some(ins
+      .flatMap(e => Step.newHostEntry(e.url, now, bcCfg.value))
+      .dropDuplicates("root_hash")
+      .join(hosts.select("root_hash"), Seq("root_hash"), "left_anti")
+      .as[HostEntry])))
+    val (counts, applyAll) = countFolds(Seq(f, h))
+    mergeBloomFrom(ins.select("url_hash").as[String], f.insertRows(counts))
+    applyAll()
   }
 
   // ------------------------------------------------------------------ rounds
@@ -249,122 +262,10 @@ final class CrawlDriver(
 
       val res = CrawlRound.run(spark, frontier, hosts, fetchLog, fState.keys,
         webNow, cfg, now, roundNo, seq, bloom, robotsSlice(now))
-      workPhaseSec += res.fetchPhaseSec
-
-      if (res.picksCount > 0) {
-        // Compose the next overlays and LAZY-localCheckpoint every delta:
-        // the logical plan truncates to a leaf immediately (a lazily-built
-        // view over plain persist()ed parts nests the previous round's
-        // plan and the analyzer cost explodes exponentially with rounds),
-        // while the data still materializes in ONE counting job below.
-        // Every leaf is coalesced to the session parallelism BEFORE the
-        // checkpoint: (a) overlays are re-composed (old ∪ delta) every
-        // round and union concatenates partitions — unbounded growth;
-        // (b) ~11 parts × 64-128 shuffle partitions each puts thousands
-        // of ms-sized tasks into the counting job, whose per-task driver
-        // scheduling cost is serial and wrecks the 8→32 scaling ratio.
-        val par = spark.sparkContext.defaultParallelism
-        def leaf[T](ds: Dataset[T]): Dataset[T] =
-          ds.coalesce(par).stateLeaf
-        val (fu, hu, lu, fo, ho, lo, fn, hn, ln, pg, ext, tr) = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext = leafEc
-          // The update deltas are leafed before they compose into the
-          // overlays (and double as the store-visible deltas): the
-          // overlay's key scan then runs the same generated class as
-          // every other key scan of a leaf of that table, where a raw
-          // plan would compile its own. All leafs finalize CONCURRENTLY
-          // on leafEc (see its doc); each overlay chains after its own
-          // update delta's handle.
-          val fuF = Future { leaf(res.updatedFrontier) }
-          val huF = Future { leaf(res.updatedHosts) }
-          val luF = Future { leaf(res.logUpdates) }
-          // an empty overlay composes to the update leaf itself
-          def overlay[T](st: DeltaState[T], u: Dataset[T]): Dataset[T] = {
-            val o = st.composeOverlay(u)
-            if (o eq u) u else leaf(o)
-          }
-          val foF = fuF.map(overlay(fState, _))
-          val hoF = huF.map(overlay(hState, _))
-          val loF = luF.map(overlay(lState, _))
-          val fnF  = Future { leaf(res.newFrontier) }
-          val hnF  = Future { leaf(res.newHosts) }
-          val lnF  = Future { leaf(res.logInserts) }
-          val pgF  = Future { leaf(res.pagesDelta) }
-          val extF = Future { leaf(res.extractedDelta) }
-          val trF  = Future { leaf(res.trace) }
-          // Generous finite timeout: a wedged leaf job must surface as
-          // a labeled error, not hang the round forever (ADVICE r4). At
-          // any measured scale a leaf finalizes in seconds; 30 min is
-          // far past wedged on this box.
-          def get[T](f: Future[T]): T =
-            try Await.result(f, Duration(30, "min"))
-            catch {
-              case e: java.util.concurrent.TimeoutException =>
-                throw new RuntimeException(
-                  s"leaf finalization wedged >30min (round $roundNo)", e)
-            }
-          (get(fuF), get(huF), get(luF), get(foF), get(hoF), get(loF),
-            get(fnF), get(hnF), get(lnF), get(pgF), get(extF), get(trF))
-        }
-        // With a store, bucket tags ride the SAME counting job (zero extra
-        // jobs for the changed-bucket sets); without one, the leaves are
-        // counted over their row RDDs, which compiles no scan classes.
-        val parts: Seq[(String, DataFrame, Column)] = Seq(
-          ("fn", fn.toDF(), fState.bucketCol),
-          ("hn", hn.toDF(), hState.bucketCol),
-          ("ln", ln.toDF(), lState.bucketCol),
-          ("pg", pg.toDF(), pState.bucketCol),
-          ("ext", ext.toDF(), eState.bucketCol),
-          ("tr", tr.toDF(), lit(0)),
-          ("fo", fo.toDF(), lit(0)), ("ho", ho.toDF(), lit(0)),
-          ("lo", lo.toDF(), lit(0))) ++
-          (if (track) Seq(
-            ("fu", fu.toDF(), fState.bucketCol),
-            ("hu", hu.toDF(), hState.bucketCol),
-            ("lu", lu.toDF(), lState.bucketCol)) else Nil)
-        val ((counts, buckets), matSec) = timed {
-          if (track) materializeAndCount(parts)
-          else (parts.map(_._1).zip(
-              graft.tables.StateLeaf.countRows(parts.map(_._2))).toMap,
-            Map.empty[String, Set[Int]])
-        }
-        val (_, bloomSec) = timed {
-          mergeBloomFrom(fn.select("url_hash").as[String], counts("fn"))
-        }
-        workPhaseSec += matSec + bloomSec
-
-        // Size each retained part's task count from its ACTUAL rows (a
-        // post-materialization coalesce is a narrow, zero-copy view that
-        // stays a leaf): a 2k-row late-round delta must not cost 64
-        // scheduler tasks on every later scan of the accumulated parts.
-        def sized[T](ds: Dataset[T], rows: Long): Dataset[T] =
-          org.apache.spark.sql.graft.BatchedLeaf.coalesce(ds, math.max(1L,
-            math.min(par.toLong, rows / 200000L + 1L)).toInt)
-        // a keyed table's round: update u → overlay o, then inserts n
-        def keyed[T](st: DeltaState[T], t: String,
-                     u: Dataset[T], o: Dataset[T], n: Dataset[T]): Unit = {
-          st.swapOverlay(o, counts(t + "o"))
-          st.addInserts(sized(n, counts(t + "n")), counts(t + "n"))
-          st.stage(Seq(u, n), buckets(t + "u") ++ buckets(t + "n"))
-        }
-        keyed(fState, "f", fu, fo, fn)
-        keyed(hState, "h", hu, ho, hn)
-        keyed(lState, "l", lu, lo, ln)
-        eState.append(sized(ext, counts("ext")))
-        eState.stage(Seq(ext), buckets("ext"))
-        pState.append(sized(pg, counts("pg")))
-        pState.stage(Seq(pg), buckets("pg"))
-        traceParts :+= sized(tr, counts("tr"))
-        roundOffsets :+= ((roundNo.toInt, seq))
-        if (track) pendingTraceParts :+= tr
-        seq += res.picksCount
-        pendingMetrics = pendingMetrics ++ Map(
-          "picks"      -> (pendingMetrics.getOrElse("picks", 0L) + res.picksCount),
-          "discovered" -> (pendingMetrics.getOrElse("discovered", 0L) + counts("fn")))
-      }
-      res.cleanup()
+      try {
+        workPhaseSec += res.fetchPhaseSec
+        if (res.picksCount > 0) foldRound(res)
+      } finally res.cleanup()
       roundNo += 1
       if (track && roundNo % checkpointEvery == 0) checkpoint(now)
       r += 1
@@ -375,58 +276,78 @@ final class CrawlDriver(
       checkpoint(lastNow)
   }
 
+  /** Fold a round's deltas in: each table pairs with its delta once, all
+    * leaves (and the trace's) build on the leaf pool, one job counts them,
+    * the bloom takes the discovered keys, and then every fold applies. */
+  private def foldRound(res: CrawlRound.RoundResult): Unit = {
+    val trF = Future(StateLeaf.deltaLeaf(res.trace))
+    val folds = await(Future.sequence(Seq[Future[Fold[_]]](
+      fState.fold(Some(res.updatedFrontier), Some(res.newFrontier)),
+      hState.fold(Some(res.updatedHosts), Some(res.newHosts)),
+      lState.fold(Some(res.logUpdates), Some(res.logInserts)),
+      eState.fold(None, Some(res.extractedDelta)),
+      pState.fold(None, Some(res.pagesDelta)))))
+    val tr = await(trF)
+    val ((counts, applyAll), matSec) = timed(countFolds(folds, tr))
+    val discovered = folds.head.insertRows(counts) // frontier counts first
+    val (_, bloomSec) = timed(mergeBloomFrom(
+      folds.head.insert.get.select("url_hash").as[String], discovered))
+    workPhaseSec += matSec + bloomSec
+
+    applyAll()
+    traceParts :+= StateLeaf.sized(tr, counts.last)
+    if (track) pendingTraceParts :+= tr
+    seq += res.picksCount
+    pendingMetrics = pendingMetrics ++ Map(
+      "picks"      -> (pendingMetrics.getOrElse("picks", 0L) + res.picksCount),
+      "discovered" -> (pendingMetrics.getOrElse("discovered", 0L) + discovered))
+  }
+
   /** The round number the latest snapshot was committed (or resumed) at. */
   private var checkpointedRound: Long = -1L
 
   private def hasPending: Boolean =
     tables.exists(_.hasPending) || pendingTraceParts.nonEmpty
 
-  /** Materialize all persisted parts and count each — ONE Spark job over a
-    * tagged union (scanning `(lit(tag), bucket)` off a persisted plan
-    * populates its cache; the heavy shared subtrees — step output, seen
-    * filter — compute exactly once under the cache locks). The same job
-    * yields each part's changed-bucket set for the COW snapshot commit. */
-  private def materializeAndCount(parts: Seq[(String, DataFrame, Column)])
-      : (Map[String, Long], Map[String, Set[Int]]) = {
-    val tagged = parts.map { case (t, df, b) =>
-      df.select(lit(t).as("part"), b.as("bucket")) }
+  /** Materialize leaves and count each — ONE Spark job over a tagged
+    * union (scanning `(lit(tag), bucket)` off a persisted plan populates
+    * its cache; the heavy shared subtrees — step output, seen filter —
+    * compute exactly once under the cache locks). The same job yields each
+    * leaf's bucket set for the COW snapshot commit. */
+  private def materializeAndCount(parts: Seq[(Dataset[_], Column)])
+      : (Seq[Long], Seq[Set[Int]]) = {
+    val tagged = parts.zipWithIndex.map { case ((ds, b), i) =>
+      ds.toDF().select(lit(i.toString).as("part"), b.as("bucket")) }
       .reduce(_ unionByName _)
-    val got = tagged.groupBy("part", "bucket").count().collect()
-    val byPart = got.groupBy(_.getString(0))
-    val counts = parts.map { case (t, _, _) =>
-      t -> byPart.get(t).map(_.map(_.getLong(2)).sum).getOrElse(0L) }.toMap
-    val bks = parts.map { case (t, _, _) =>
-      t -> byPart.get(t).map(_.map(_.getInt(1)).toSet)
-        .getOrElse(Set.empty[Int]) }.toMap
-    (counts, bks)
+    val byPart = tagged.groupBy("part", "bucket").count().collect()
+      .groupBy(_.getString(0))
+    parts.indices.map { i =>
+      val rows = byPart.getOrElse(i.toString, Array.empty[Row])
+      (rows.map(_.getLong(2)).sum, rows.map(_.getInt(1)).toSet)
+    }.unzip
   }
 
   private def maybeCompact(): Unit = {
     tables.foreach(t => if (t.needsCompaction) t.compact())
-    // fold trace parts only when none are pending a snapshot append — the
-    // fold clears roundOffsets, which pending parts still need for seq
-    if (traceParts.size > 48 && pendingTraceParts.isEmpty) {
-      traceBase = traceAll.stateLeafEager
+    if (traceParts.size > 48) {
+      traceBase = StateLeaf.eagerLeaf(traceAll)
       traceParts = Vector.empty
-      roundOffsets = Vector.empty
     }
   }
 
   // -------------------------------------------------------------- trace view
 
-  /** TraceRow view of keyed parts: seq = round offset + rank within round
-    * by the A1 composite key — the same total order the serial reference
-    * loop produces, derived on read instead of sorted in the hot path. */
+  /** TraceRow view of keyed parts: seq = the round's first seq + rank
+    * within the round by the A1 composite key — the same total order the
+    * serial reference loop produces, derived on read instead of sorted in
+    * the hot path. */
   private def traceRowsOf(parts: Vector[Dataset[TraceKeyed]])
       : Dataset[TraceRow] = {
     if (parts.isEmpty) return spark.emptyDataset[TraceRow]
-    val all = parts.map(_.toDF()).reduce(_ unionByName _)
-    val offsets = roundOffsets.toDF("round", "base")
     val w = Window.partitionBy(col("round"))
       .orderBy(col("k1"), col("k2"), col("k3"), col("k4"), col("url"))
-    all.join(broadcast(offsets), Seq("round"))
-      .withColumn("_rk", row_number().over(w))
-      .select((col("base") + col("_rk") - 1).cast("long").as("seq"),
+    parts.map(_.toDF()).reduce(_ unionByName _)
+      .select((col("seq_start") + row_number().over(w) - 1).as("seq"),
         col("round"), col("url"), col("state_at_dequeue"))
       .as[TraceRow]
   }
@@ -440,8 +361,7 @@ final class CrawlDriver(
     * priority-ordered) — the store merges them with the previous snapshot's
     * changed-bucket files and carries every untouched bucket's pointer
     * forward, so a commit reads O(changed buckets + delta), never the full
-    * table views (VERDICT r2 "what's wrong" #2). Changed-bucket sets were
-    * accumulated from the round's one counting job. */
+    * table views. The changed buckets came from the folds' counting jobs. */
   def checkpoint(now: Long): Unit = {
     val st = store.getOrElse(return)
     snapshot = Some(st.commit(
@@ -451,7 +371,7 @@ final class CrawlDriver(
       appendData = Map("trace" -> traceRowsOf(pendingTraceParts).toDF()),
       // num_buckets is the COW commit granularity: a resume at a different
       // modulus would silently duplicate keys across bucket dirs —
-      // resume() require()s this match (ADVICE r3)
+      // resume() require()s this match
       metrics = pendingMetrics ++ tables.flatMap(_.metrics) +
         ("num_buckets" -> numBuckets.toLong)))
     tables.foreach(_.clearPending())
@@ -479,10 +399,9 @@ final class CrawlDriver(
     }
     snapshot = Some(snap)
     tables.foreach(_.restore(st, snap))
-    traceBase = st.readAppend(spark, snap, "trace",
-      Encoders.product[TraceRow].schema).as[TraceRow].stateLeafEager
+    traceBase = StateLeaf.eagerLeaf(st.readAppend(spark, snap, "trace",
+      Encoders.product[TraceRow].schema).as[TraceRow])
     traceParts = Vector.empty
-    roundOffsets = Vector.empty
     seq = snap.seq
     roundNo = snap.round
     checkpointedRound = snap.round
@@ -506,19 +425,19 @@ final class CrawlDriver(
   def mqReject(urlHash: String): Unit = mqRejectBatch(Seq(urlHash))
 
   /** Batched acks: ONE keyed overlay merge for the whole batch — O(batch),
-    * never a full-frontier rewrite (VERDICT r1 "what's wrong" #1). */
+    * never a full-frontier rewrite. */
   def mqAckBatch(urlHashes: Seq[String]): Unit =
-    fState.update(MqConsumer.ackDelta(frontier, urlHashes))
+    change(fState.fold(Some(MqConsumer.ackDelta(frontier, urlHashes)), None))
 
   def mqRejectBatch(urlHashes: Seq[String]): Unit =
-    fState.update(MqConsumer.rejectDelta(frontier, urlHashes))
+    change(fState.fold(Some(MqConsumer.rejectDelta(frontier, urlHashes)), None))
 
   /** S7 partition tool (reference: crawler/partition.c:47-96): label a
     * host root for scoped processing (F8). */
   def setHostPartition(rootUrl: String, partition: Option[String]): Unit = {
     val canonRoot = Urls.canonicalRoot(rootUrl).getOrElse(return)
-    hState.update(hosts.filter(col("root_url") === canonRoot)
-      .map(_.copy(partition = partition)))
+    change(hState.fold(Some(hosts.filter(col("root_url") === canonRoot)
+      .map(_.copy(partition = partition))), None))
   }
 
   /** crawl-locate analog (reference: utils/crawl-locate.c:40-85): what
@@ -556,8 +475,7 @@ final class CrawlDriver(
     // a single-root filter is a row predicate; a partition-label scope is
     // a broadcast LEFT SEMI join against the label's root_hash slice —
     // never a collect() of the matching roots to the driver (a label over
-    // 10^7 hosts would be a ~GB driver set; the semi-join costs the same
-    // broadcast and materializes nothing driver-side — VERDICT r3 #4)
+    // 10^7 hosts would be a ~GB driver set)
     val keyed: Dataset[(String, CrawlRound.PageStoreRow)] = pages.map { p =>
       (Urls.canonicalRoot(p.url).map(Urls.urlHash).getOrElse(""), p)
     }
@@ -611,7 +529,7 @@ final class CrawlDriver(
 
   /** fetch_log row count from tracked deltas (no Spark job) — correct only
     * while first-fetch rows route to addInserts and refetches to the
-    * overlay (the DeltaState contract; ADVICE r2 finding). */
+    * overlay (the DeltaState contract). */
   def fetchLogRows: Long = lState.rows
 
   def seenSet: Set[String] = fState.keys.collect().toSet

@@ -38,10 +38,11 @@ import graft.functions.Urls
  *  5. Returned are pure DELTAS (updates + inserts per table); the driver
  *     owns state as base+overlay+inserts (tables.DeltaState) — a round
  *     never rewrites any full table.
- *  6. Generated code is the same every round: the clock and round number
- *     reach it as data (`by_ref`, StepOut columns), never as literals, so
- *     a warm round reuses the classes Spark compiled for the rounds before
- *     it (see CodegenReuseSpec).
+ *  6. Generated code is the same every round: the clock, the round number
+ *     and the round's first trace sequence number reach it as data
+ *     (`by_ref`, StepOut columns), never as literals, so a warm round
+ *     reuses the classes Spark compiled for the rounds before it (see
+ *     CodegenReuseSpec).
  *
  * Skew note (SURVEY §7.4): the scheduling groupByKey must stay unsalted
  * (politeness is per-host), but its groups are tiny by construction —
@@ -73,10 +74,12 @@ object CrawlRound {
   final case class PageStoreRow(url_hash: String, url: String,
                                 updated: Long, body: Array[Byte])
 
-  /** One trace row with its A1 composite emission key; the global `seq`
-    * is derived lazily (rank within round + per-round offset). */
-  final case class TraceKeyed(round: Int, k1: Int, k2: Long, k3: Long,
-                              k4: Int, url: String, state_at_dequeue: String)
+  /** One trace row with its A1 composite emission key and its round's
+    * first sequence number; the global `seq` is derived lazily
+    * (`seq_start` + rank within the round). */
+  final case class TraceKeyed(round: Int, seq_start: Long, k1: Int, k2: Long,
+                              k3: Long, k4: Int, url: String,
+                              state_at_dequeue: String)
 
   /** A dequeued winner with its emission-order key flattened for sorting
     * (k5 is the url itself) and its host's robots.txt url ("" when the
@@ -116,11 +119,12 @@ object CrawlRound {
       text: Option[String],
       body: Option[Array[Byte]],
       outlinks: Seq[String],
-      /** The round's clock and number, carried as data so the delta
-        * projections read columns instead of inlining per-round literals
-        * into the generated code. */
+      /** The round's clock, number and first trace sequence number,
+        * carried as data so the delta projections read columns instead of
+        * inlining per-round literals into the generated code. */
       now: Long,
-      round: Int)
+      round: Int,
+      seqStart: Long)
 
   /** Pure per-table DELTAS of one round (plans over the round-internal
     * leaves; the driver leafs + materializes them in one job and folds
@@ -305,7 +309,7 @@ object CrawlRound {
           res.extractedText,
           if (res.commit) Some(wEntry.map(_.body)
             .getOrElse(Array.emptyByteArray)) else None,
-          res.outlinks, now, roundNo)
+          res.outlinks, now, roundNo, seqStart)
       }
     }
 
@@ -315,10 +319,9 @@ object CrawlRound {
     // A columnar cache would add a generated accessor class per distinct
     // column slice its consumers read. Every round-internal leaf is
     // released by the round's cleanup.
-    val stateLevel = graft.tables.StateLeaf.levelFor(spark)
     val roundLeaves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def roundLeaf(df: DataFrame): DataFrame = {
-      roundLeaves += graft.tables.StateLeaf.lazyLeaf(df, stateLevel)
+      roundLeaves += graft.tables.StateLeaf.lazyLeaf(df)
       roundLeaves.last
     }
     val stepOuts = roundLeaf(outs.toDF())
@@ -349,8 +352,8 @@ object CrawlRound {
       .select(col("url"), col("text"))
       .as[ExtractedRow]
     val trace = stepOuts
-      .select(col("round"), col("k1"), col("k2"), col("k3"),
-        col("k4"), col("url"), col("state_at_dequeue"))
+      .select(col("round"), col("seqStart").as("seq_start"), col("k1"),
+        col("k2"), col("k3"), col("k4"), col("url"), col("state_at_dequeue"))
       .as[TraceKeyed]
 
     // --- 5. discovered URLs: canonicalize → seen-filter → insert ---------

@@ -1,7 +1,8 @@
 package graft.tables
 
+import scala.concurrent.{ExecutionContext, Future}
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /**
  * One durable crawl table (frontier, hosts, fetch_log, extracted, pages):
@@ -14,8 +15,10 @@ import org.apache.spark.sql.functions.{broadcast, col}
  * deltas, no extra job — and the store merges them with ONLY the changed
  * buckets' previous files.
  *
- * An untracked table (a driver with no snapshot store) stages nothing, so
- * it holds no references to past round leaves.
+ * A table changes only through [[fold]] — a round, a seed, an mq
+ * transition or a partition label alike. An untracked table (a driver
+ * with no snapshot store) stages nothing, so it holds no references to
+ * past round leaves.
  */
 trait CrawlTable[T] {
   protected def spark: SparkSession
@@ -35,24 +38,39 @@ trait CrawlTable[T] {
   /** Manifest metrics the table contributes to a commit. */
   def metrics: Map[String, Long] = Map.empty
 
+  /** An update leaf's overlay leaf; only a DeltaState takes updates. */
+  protected def overlayOf(update: Dataset[T]): Dataset[T] =
+    throw new UnsupportedOperationException(s"$name takes no updates")
+  /** Swap in a counted overlay and add a counted insert part. */
+  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
+                                   insert: Option[(Dataset[T], Long)]): Unit
+
+  /** Leaf one change on `ec`: its replace-by-key `update` rows and its
+    * `insert` rows (new keys, or an appended part). The overlay is composed
+    * from the update LEAF once that is built, so its key scan runs the
+    * same generated class as every other scan of the table's leaves; the
+    * insert leaf builds concurrently. Nothing changes until the fold is
+    * applied. */
+  def fold(update: Option[Dataset[T]], insert: Option[Dataset[T]])
+          (implicit ec: ExecutionContext): Future[Fold[T]] = {
+    val uF = Future(update.map(StateLeaf.deltaLeaf))
+    val oF = uF.map(_.map(overlayOf))
+    val nF = Future(insert.map(StateLeaf.deltaLeaf))
+    for (u <- uF; o <- oF; n <- nF) yield new Fold(this, track, u, o, n)
+  }
+
   private var pending: Vector[Dataset[T]] = Vector.empty
   private var pendingBuckets: Set[Int]    = Set.empty
 
   def hasPending: Boolean = pending.nonEmpty
 
   /** Stage materialized delta parts, in priority order, with the buckets
-    * they touch. `buckets` is only evaluated for a tracked table. */
-  def stage(parts: Seq[Dataset[T]], buckets: => Set[Int]): Unit =
+    * they touch. */
+  private[tables] def stage(parts: Seq[Dataset[T]], buckets: Set[Int]): Unit =
     if (track) {
       pending ++= parts
       pendingBuckets ++= buckets
     }
-
-  /** Stage one driver-initiated delta (seeds, mq transitions, partition
-    * labels): its buckets come from one narrow job over just its rows. */
-  protected def stage(delta: Dataset[T]): Unit =
-    stage(Seq(delta), delta.select(bucketCol).distinct().collect()
-      .map(_.getInt(0)).toSet)
 
   def cowDelta: SnapshotStore.CowDelta = SnapshotStore.CowDelta(
     pending.map(_.toDF().withColumn("bucket", bucketCol)), keyCols,
@@ -67,6 +85,41 @@ trait CrawlTable[T] {
                              snap: SnapshotStore.Snapshot): Dataset[T] =
     StateLeaf.eagerLeaf(
       store.readCow(spark, snap, name, enc.schema).as[T](enc))
+}
+
+/**
+ * One change to a [[CrawlTable]], leafed but not yet applied. The caller
+ * counts [[leaves]] in its one counting job, then passes their counts and
+ * bucket sets, in [[leaves]] order, to [[apply]].
+ */
+final class Fold[T] private[tables] (table: CrawlTable[T], track: Boolean,
+    update: Option[Dataset[T]], overlay: Option[Dataset[T]],
+    val insert: Option[Dataset[T]]) {
+
+  // untracked, the update leaf is not counted: the overlay reads it
+  private val parts: Seq[(String, Dataset[T], Column)] =
+    (if (track) update.map(("update", _, table.bucketCol)) else None).toSeq ++
+      overlay.map(("overlay", _, lit(0))) ++
+      insert.map(("insert", _, table.bucketCol))
+
+  /** The leaves to count, each with the column that buckets its rows. */
+  def leaves: Seq[(Dataset[_], Column)] = parts.map(p => (p._2, p._3))
+
+  /** The insert leaf's row count, from counts that start with this
+    * fold's [[leaves]]. */
+  def insertRows(counts: Seq[Long]): Long =
+    parts.map(_._1).zip(counts).toMap.getOrElse("insert", 0L)
+
+  /** Swap the overlay in, add the size-coalesced insert part, and stage
+    * the parts in priority order (update, then insert). */
+  def apply(counts: Seq[Long], buckets: Seq[Set[Int]]): Unit = {
+    val got = parts.map(_._1).zip(counts.zip(buckets)).toMap
+    def rows(role: String) = got(role)._1
+    table.applyParts(overlay.map(_ -> rows("overlay")),
+      insert.map(i => StateLeaf.sized(i, rows("insert")) -> rows("insert")))
+    table.stage(update.toSeq ++ insert,
+      (got - "overlay").values.flatMap(_._2).toSet)
+  }
 }
 
 /**
@@ -136,8 +189,8 @@ final class DeltaState[T](
     allBaseAndInserts.select(col(keyCol).cast("string")).as[String]
   }
 
-  /** The next overlay plan folding in a round's update delta. The caller
-    * persists + materializes it, then swaps it in via swapOverlay. */
+  /** The next overlay plan folding in an update delta. The fold leafs
+    * it; the apply swaps it in via swapOverlay. */
   def composeOverlay(updates: Dataset[T]): Dataset[T] =
     if (overlayRows == 0) updates
     else overlay
@@ -146,12 +199,11 @@ final class DeltaState[T](
       .unionByName(updates)
 
   /** Swap in a materialized overlay. Overlays are plan-truncated state
-    * leaves (StateLeaf: batched slabs or local checkpoint), and
-    * Dataset.unpersist is a no-op for both forms (the blocks are RDD-level,
-    * never CacheManager entries) — the old overlay's storage is reclaimed
-    * by the ContextCleaner once the new overlay (which references it only
-    * through already-computed data, not lineage) drops the last
-    * reference. */
+    * leaves ([[StateLeaf]]), and Dataset.unpersist is a no-op for them
+    * (the blocks are RDD-level, never CacheManager entries) — the old
+    * overlay's storage is reclaimed by the ContextCleaner once the new
+    * overlay (which references it only through already-computed data, not
+    * lineage) drops the last reference. */
   def swapOverlay(newOverlay: Dataset[T], n: Long): Unit = {
     overlay = newOverlay
     overlayRows = n
@@ -162,20 +214,16 @@ final class DeltaState[T](
   def addInserts(delta: Dataset[T], n: Long): Unit =
     if (n > 0) { inserts :+= delta; insertRows += n }
 
-  /** Driver-initiated replace-by-key update (force seed, mq transition,
-    * partition label): fold it into the overlay now and stage it — without
-    * the stage, a carried-forward bucket pointer would drop the change
-    * from the next snapshot. */
-  def update(delta: Dataset[T]): Unit = {
-    val o = StateLeaf.lazyLeaf(composeOverlay(delta))
-    swapOverlay(o, o.count())
-    stage(delta)
+  // an empty overlay composes to the update leaf itself
+  override protected def overlayOf(update: Dataset[T]): Dataset[T] = {
+    val o = composeOverlay(update)
+    if (o eq update) update else StateLeaf.deltaLeaf(o)
   }
 
-  /** Driver-initiated insert of a counted leaf (seeds), staged. */
-  def insert(delta: Dataset[T], n: Long): Unit = {
-    addInserts(delta, n)
-    stage(delta)
+  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
+                                   insert: Option[(Dataset[T], Long)]): Unit = {
+    overlay.foreach { case (o, n) => swapOverlay(o, n) }
+    insert.foreach { case (i, n) => addInserts(i, n) }
   }
 
   /** Replace everything with a materialized base (seed bulk-load, resume,
@@ -239,6 +287,10 @@ final class AppendState[T](
     else lastWriterWins((base +: parts).map(_.toDF()), keyCols).as[T](enc)
 
   def append(delta: Dataset[T]): Unit = parts :+= delta
+
+  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
+                                   insert: Option[(Dataset[T], Long)]): Unit =
+    insert.foreach { case (i, _) => append(i) }
 
   def setBase(b: Dataset[T]): Unit = {
     parts.foreach(_.unpersist())

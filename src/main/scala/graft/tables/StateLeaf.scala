@@ -45,6 +45,25 @@ object StateLeaf {
   def eagerLeaf[T](ds: Dataset[T]): Dataset[T] =
     eagerLeaf(ds, levelFor(ds.sparkSession))
 
+  /** A change's leaf: lazy, and coalesced to the session parallelism
+    * BEFORE it is stored — an overlay is re-composed (old ∪ delta) on
+    * every change and a union concatenates partitions, so it would grow
+    * without bound; and each delta's 64-128 shuffle partitions would put
+    * thousands of ms-sized tasks into the counting job, whose per-task
+    * scheduling runs serially on the driver. */
+  def deltaLeaf[T](ds: Dataset[T]): Dataset[T] =
+    lazyLeaf(ds.coalesce(ds.sparkSession.sparkContext.defaultParallelism))
+
+  /** A counted leaf in as many partitions as its rows need (one per 200k,
+    * at most the session parallelism): a narrow zero-copy view that stays
+    * a leaf, so a 2k-row delta does not cost 64 tasks on every later scan
+    * of the parts it joins. */
+  def sized[T](leaf: Dataset[T], rows: Long): Dataset[T] = {
+    val par = leaf.sparkSession.sparkContext.defaultParallelism.toLong
+    BatchedLeaf.coalesce(leaf,
+      math.max(1L, math.min(par, rows / 200000L + 1L)).toInt)
+  }
+
   /** Union of same-schema parts: one leaf scan when every part is a leaf
     * (see BatchedLeaf.concat), a SQL union otherwise. */
   def union[T](parts: Seq[Dataset[T]]): Dataset[T] =

@@ -159,10 +159,10 @@ object BatchedLeaf {
         s"not a state leaf: ${other.nodeName}")
     }
 
-  /** The row RDD a leaf (batched or local checkpoint) scans. */
+  /** The row RDD a leaf scans. */
   def rowsOf(ds: Dataset[_]): RDD[InternalRow] = leafOf(ds).rdd
 
-  /** Is `ds` a plan-truncated leaf (batched or local checkpoint)? */
+  /** Is `ds` a plan-truncated leaf? */
   def isLeaf(ds: Dataset[_]): Boolean =
     ds.asInstanceOf[CDataset[_]].queryExecution.analyzed
       .isInstanceOf[LogicalRDD]
