@@ -188,25 +188,26 @@ final class CrawlDriver(
   /** Count the folds' leaves, then `more` leaves, in ONE job: with a
     * store through materializeAndCount, which also yields the staged
     * parts' buckets; without one over the leaves' row RDDs, which compiles
-    * no scan classes. Returns the counts in leaf order, and the step that
-    * applies every fold with its share of the counts and buckets. */
-  private def countFolds(folds: Seq[Fold[_]], more: Dataset[_]*)
-      : (Seq[Long], () => Unit) = {
+    * no scan classes. Each fold takes its own leaves' counts and buckets;
+    * returns the counts of `more`. */
+  private def countFolds(folds: Seq[Fold[_]], more: Dataset[_]*): Seq[Long] = {
     val leaves = folds.flatMap(_.leaves) ++ more.map(_ -> lit(0))
-    val (counts, buckets) =
+    val counted =
       if (track) materializeAndCount(leaves)
-      else (StateLeaf.countRows(leaves.map(_._1)),
-        leaves.map(_ => Set.empty[Int]))
-    (counts, () => folds.foldLeft(0) { (at, f) =>
-      val end = at + f.leaves.size
-      f.apply(counts.slice(at, end), buckets.slice(at, end))
-      end
-    })
+      else StateLeaf.countRows(leaves.map(_._1)).map(_ -> Set.empty[Int])
+    folds.foldLeft(counted) { (rest, f) =>
+      val (own, next) = rest.splitAt(f.leaves.size)
+      f.counted(own)
+      next
+    }.map(_._1)
   }
 
   /** A change between rounds (mq transition, partition label). */
-  private def change(fold: Future[Fold[_]]): Unit =
-    countFolds(Seq(await(fold)))._2()
+  private def change(fold: Future[Fold[_]]): Unit = {
+    val f = await(fold)
+    countFolds(Seq(f))
+    f.apply()
+  }
 
   // ------------------------------------------------------------------ seeds
 
@@ -244,9 +245,10 @@ final class CrawlDriver(
       .dropDuplicates("root_hash")
       .join(hosts.select("root_hash"), Seq("root_hash"), "left_anti")
       .as[HostEntry])))
-    val (counts, applyAll) = countFolds(Seq(f, h))
-    mergeBloomFrom(ins.select("url_hash").as[String], f.insertRows(counts))
-    applyAll()
+    countFolds(Seq(f, h))
+    mergeBloomFrom(ins.select("url_hash").as[String], f.insertRows)
+    f.apply()
+    h.apply()
   }
 
   // ------------------------------------------------------------------ rounds
@@ -272,7 +274,8 @@ final class CrawlDriver(
     }
     // a final commit only for what the last in-loop checkpoint missed: a
     // second commit of the same state would publish an empty snapshot
-    if (track && (roundNo != checkpointedRound || hasPending))
+    if (track && (roundNo != checkpointedRound ||
+        tables.exists(_.hasPending) || pendingTraceParts.nonEmpty))
       checkpoint(lastNow)
   }
 
@@ -281,33 +284,29 @@ final class CrawlDriver(
     * the bloom takes the discovered keys, and then every fold applies. */
   private def foldRound(res: CrawlRound.RoundResult): Unit = {
     val trF = Future(StateLeaf.deltaLeaf(res.trace))
-    val folds = await(Future.sequence(Seq[Future[Fold[_]]](
-      fState.fold(Some(res.updatedFrontier), Some(res.newFrontier)),
+    val fF = fState.fold(Some(res.updatedFrontier), Some(res.newFrontier))
+    val folds = await(Future.sequence(Seq[Future[Fold[_]]](fF,
       hState.fold(Some(res.updatedHosts), Some(res.newHosts)),
       lState.fold(Some(res.logUpdates), Some(res.logInserts)),
-      eState.fold(None, Some(res.extractedDelta)),
-      pState.fold(None, Some(res.pagesDelta)))))
-    val tr = await(trF)
-    val ((counts, applyAll), matSec) = timed(countFolds(folds, tr))
-    val discovered = folds.head.insertRows(counts) // frontier counts first
+      eState.fold(res.extractedDelta),
+      pState.fold(res.pagesDelta))))
+    val (f, tr) = (await(fF), await(trF))
+    val (trRows, matSec) = timed(countFolds(folds, tr).head)
     val (_, bloomSec) = timed(mergeBloomFrom(
-      folds.head.insert.get.select("url_hash").as[String], discovered))
+      f.insert.get.select("url_hash").as[String], f.insertRows))
     workPhaseSec += matSec + bloomSec
 
-    applyAll()
-    traceParts :+= StateLeaf.sized(tr, counts.last)
+    folds.foreach(_.apply())
+    traceParts :+= StateLeaf.sized(tr, trRows)
     if (track) pendingTraceParts :+= tr
     seq += res.picksCount
     pendingMetrics = pendingMetrics ++ Map(
       "picks"      -> (pendingMetrics.getOrElse("picks", 0L) + res.picksCount),
-      "discovered" -> (pendingMetrics.getOrElse("discovered", 0L) + discovered))
+      "discovered" -> (pendingMetrics.getOrElse("discovered", 0L) + f.insertRows))
   }
 
   /** The round number the latest snapshot was committed (or resumed) at. */
   private var checkpointedRound: Long = -1L
-
-  private def hasPending: Boolean =
-    tables.exists(_.hasPending) || pendingTraceParts.nonEmpty
 
   /** Materialize leaves and count each — ONE Spark job over a tagged
     * union (scanning `(lit(tag), bucket)` off a persisted plan populates
@@ -315,7 +314,7 @@ final class CrawlDriver(
     * compute exactly once under the cache locks). The same job yields each
     * leaf's bucket set for the COW snapshot commit. */
   private def materializeAndCount(parts: Seq[(Dataset[_], Column)])
-      : (Seq[Long], Seq[Set[Int]]) = {
+      : Seq[(Long, Set[Int])] = {
     val tagged = parts.zipWithIndex.map { case ((ds, b), i) =>
       ds.toDF().select(lit(i.toString).as("part"), b.as("bucket")) }
       .reduce(_ unionByName _)
@@ -324,7 +323,7 @@ final class CrawlDriver(
     parts.indices.map { i =>
       val rows = byPart.getOrElse(i.toString, Array.empty[Row])
       (rows.map(_.getLong(2)).sum, rows.map(_.getInt(1)).toSet)
-    }.unzip
+    }
   }
 
   private def maybeCompact(): Unit = {

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
  * deltas, no extra job — and the store merges them with ONLY the changed
  * buckets' previous files.
  *
- * A table changes only through [[fold]] — a round, a seed, an mq
- * transition or a partition label alike. An untracked table (a driver
- * with no snapshot store) stages nothing, so it holds no references to
- * past round leaves.
+ * A table changes only through its `fold` — a round, a seed, an mq
+ * transition or a partition label alike: [[DeltaState.fold]] takes
+ * updates and inserts, [[AppendState.fold]] one appended part. An
+ * untracked table (a driver with no snapshot store) stages nothing, so it
+ * holds no references to past round leaves.
  */
 trait CrawlTable[T] {
   protected def spark: SparkSession
@@ -38,26 +39,8 @@ trait CrawlTable[T] {
   /** Manifest metrics the table contributes to a commit. */
   def metrics: Map[String, Long] = Map.empty
 
-  /** An update leaf's overlay leaf; only a DeltaState takes updates. */
-  protected def overlayOf(update: Dataset[T]): Dataset[T] =
-    throw new UnsupportedOperationException(s"$name takes no updates")
-  /** Swap in a counted overlay and add a counted insert part. */
-  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
-                                   insert: Option[(Dataset[T], Long)]): Unit
-
-  /** Leaf one change on `ec`: its replace-by-key `update` rows and its
-    * `insert` rows (new keys, or an appended part). The overlay is composed
-    * from the update LEAF once that is built, so its key scan runs the
-    * same generated class as every other scan of the table's leaves; the
-    * insert leaf builds concurrently. Nothing changes until the fold is
-    * applied. */
-  def fold(update: Option[Dataset[T]], insert: Option[Dataset[T]])
-          (implicit ec: ExecutionContext): Future[Fold[T]] = {
-    val uF = Future(update.map(StateLeaf.deltaLeaf))
-    val oF = uF.map(_.map(overlayOf))
-    val nF = Future(insert.map(StateLeaf.deltaLeaf))
-    for (u <- uF; o <- oF; n <- nF) yield new Fold(this, track, u, o, n)
-  }
+  /** Add a counted insert leaf: new keys, or an appended part. */
+  protected[tables] def addPart(part: Dataset[T], rows: Long): Unit
 
   private var pending: Vector[Dataset[T]] = Vector.empty
   private var pendingBuckets: Set[Int]    = Set.empty
@@ -88,37 +71,43 @@ trait CrawlTable[T] {
 }
 
 /**
- * One change to a [[CrawlTable]], leafed but not yet applied. The caller
- * counts [[leaves]] in its one counting job, then passes their counts and
- * bucket sets, in [[leaves]] order, to [[apply]].
+ * One change to a [[CrawlTable]], leafed but not yet applied: the update
+ * leaf, the overlay leaf composed from it with the step that swaps it in,
+ * and the insert leaf. The caller counts [[leaves]] in its one counting
+ * job and hands the fold their counts and bucket sets ([[counted]]); then
+ * [[insertRows]] and [[apply]] read them.
  */
 final class Fold[T] private[tables] (table: CrawlTable[T], track: Boolean,
-    update: Option[Dataset[T]], overlay: Option[Dataset[T]],
+    update: Option[Dataset[T]], overlay: Option[(Dataset[T], Long => Unit)],
     val insert: Option[Dataset[T]]) {
 
   // untracked, the update leaf is not counted: the overlay reads it
-  private val parts: Seq[(String, Dataset[T], Column)] =
-    (if (track) update.map(("update", _, table.bucketCol)) else None).toSeq ++
-      overlay.map(("overlay", _, lit(0))) ++
-      insert.map(("insert", _, table.bucketCol))
+  private val parts: Seq[(Option[Dataset[T]], Column)] = Seq(
+    update.filter(_ => track) -> table.bucketCol,
+    overlay.map(_._1) -> lit(0),
+    insert -> table.bucketCol)
+  private var counts: Seq[Option[(Long, Set[Int])]] = Nil
 
   /** The leaves to count, each with the column that buckets its rows. */
-  def leaves: Seq[(Dataset[_], Column)] = parts.map(p => (p._2, p._3))
+  def leaves: Seq[(Dataset[_], Column)] =
+    parts.collect { case (Some(leaf), b) => (leaf, b) }
 
-  /** The insert leaf's row count, from counts that start with this
-    * fold's [[leaves]]. */
-  def insertRows(counts: Seq[Long]): Long =
-    parts.map(_._1).zip(counts).toMap.getOrElse("insert", 0L)
+  /** Take the row count and bucket set of each of [[leaves]], in order. */
+  def counted(c: Seq[(Long, Set[Int])]): Unit = {
+    val it = c.iterator
+    counts = parts.map(_._1.map(_ => it.next()))
+  }
+
+  def insertRows: Long = counts(2).fold(0L)(_._1)
 
   /** Swap the overlay in, add the size-coalesced insert part, and stage
     * the parts in priority order (update, then insert). */
-  def apply(counts: Seq[Long], buckets: Seq[Set[Int]]): Unit = {
-    val got = parts.map(_._1).zip(counts.zip(buckets)).toMap
-    def rows(role: String) = got(role)._1
-    table.applyParts(overlay.map(_ -> rows("overlay")),
-      insert.map(i => StateLeaf.sized(i, rows("insert")) -> rows("insert")))
-    table.stage(update.toSeq ++ insert,
-      (got - "overlay").values.flatMap(_._2).toSet)
+  def apply(): Unit = {
+    val Seq(u, o, n) = counts
+    overlay.foreach(_._2(o.get._1))
+    insert.foreach(i =>
+      table.addPart(StateLeaf.sized(i, insertRows), insertRows))
+    table.stage(update.toSeq ++ insert, (u ++ n).flatMap(_._2).toSet)
   }
 }
 
@@ -214,17 +203,26 @@ final class DeltaState[T](
   def addInserts(delta: Dataset[T], n: Long): Unit =
     if (n > 0) { inserts :+= delta; insertRows += n }
 
-  // an empty overlay composes to the update leaf itself
-  override protected def overlayOf(update: Dataset[T]): Dataset[T] = {
-    val o = composeOverlay(update)
-    if (o eq update) update else StateLeaf.deltaLeaf(o)
+  /** Leaf one change on `ec`: its replace-by-key `update` rows and its
+    * new-key `insert` rows. The overlay is composed from the update LEAF
+    * once that is built, so its key scan runs the same generated class as
+    * every other scan of the table's leaves; the insert leaf builds
+    * concurrently. Nothing changes until the fold is applied. */
+  def fold(update: Option[Dataset[T]], insert: Option[Dataset[T]])
+          (implicit ec: ExecutionContext): Future[Fold[T]] = {
+    val uF = Future(update.map(StateLeaf.deltaLeaf))
+    val oF = uF.map(_.map { u =>
+      // an empty overlay composes to the update leaf itself
+      val o = composeOverlay(u)
+      val leaf = if (o eq u) u else StateLeaf.deltaLeaf(o)
+      (leaf, swapOverlay(leaf, _: Long))
+    })
+    val nF = Future(insert.map(StateLeaf.deltaLeaf))
+    for (u <- uF; o <- oF; n <- nF) yield new Fold(this, track, u, o, n)
   }
 
-  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
-                                   insert: Option[(Dataset[T], Long)]): Unit = {
-    overlay.foreach { case (o, n) => swapOverlay(o, n) }
-    insert.foreach { case (i, n) => addInserts(i, n) }
-  }
+  protected[tables] def addPart(part: Dataset[T], rows: Long): Unit =
+    addInserts(part, rows)
 
   /** Replace everything with a materialized base (seed bulk-load, resume,
     * compaction). */
@@ -288,9 +286,13 @@ final class AppendState[T](
 
   def append(delta: Dataset[T]): Unit = parts :+= delta
 
-  protected[tables] def applyParts(overlay: Option[(Dataset[T], Long)],
-                                   insert: Option[(Dataset[T], Long)]): Unit =
-    insert.foreach { case (i, _) => append(i) }
+  /** Leaf one appended part on `ec`; nothing changes until the fold is
+    * applied. */
+  def fold(part: Dataset[T])(implicit ec: ExecutionContext): Future[Fold[T]] =
+    Future(new Fold(this, track, None, None, Some(StateLeaf.deltaLeaf(part))))
+
+  protected[tables] def addPart(part: Dataset[T], rows: Long): Unit =
+    append(part)
 
   def setBase(b: Dataset[T]): Unit = {
     parts.foreach(_.unpersist())
