@@ -2,9 +2,9 @@ package graft.driver
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{Column, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, row_number}
 import graft.core._
 import graft.functions.Urls
 import graft.operators.{CrawlRound, SeenFilter}
@@ -27,14 +27,20 @@ import graft.tables.{AppendState, CrawlTable, DeltaState, Fold, SnapshotStore, S
  * checkpoint commits them; checkpoint, resume and compaction are loops
  * over the one table list. Every change — a round, a seed, an mq
  * transition, a partition label — takes one path: each touched table
- * `fold`s its delta into leaves, ONE job (`countFolds`) counts them all
- * and yields their changed buckets, the bloom merge follows, and only
- * then are the folds applied: a failed count changes no table. That job
- * is not a round's whole cost: with AQE every exchange and broadcast
- * under a leaf runs as its own job when the leaf is built, so the recrawl
- * benchmark (1,000-host Zipf web, local[4]) measures 23.6 Spark jobs and
- * 63 tasks a round (27.6 and 226 before the round's generated code was
- * made reusable and its leaves counted over row RDDs).
+ * `fold`s its delta into leaves, ONE job (`countFolds`) counts them all,
+ * yields their changed buckets and builds the bloom batch of the new
+ * frontier keys, the bloom merge follows, and only then are the folds
+ * applied: a failed count changes no table. A counted leaf carries its
+ * count as planner statistics, so a round's joins against small state
+ * (hosts, fetch log, overlays) are planned as broadcast-hash joins. The
+ * counting job is not a round's whole cost: with AQE every exchange and
+ * broadcast under a leaf runs as its own job when the leaf is built, so
+ * the recrawl benchmark (1,000-host Zipf web, local[4]) measures 14.8
+ * Spark jobs and 47 tasks a round (23.6 and 63 while every leaf carried
+ * the capped size estimate, the seen filter shuffled the seen set twice
+ * and the bloom batch was its own aggregate; 27.6 and 226 before the
+ * round's generated code was made reusable and its leaves counted over
+ * row RDDs).
  *
  * Generated code is reused across rounds: per-round values reach it as
  * data (see CrawlRound), and the driver sets
@@ -93,7 +99,8 @@ final class CrawlDriver(
   var roundNo: Long = 0L
   var lastNow: Long = 0L
   /** Accumulated work-phase wall seconds across rounds (bench metric):
-    * the fetch+process job + the delta-materialization job + bloom build. */
+    * the fetch+process job + the delta-counting job, which builds the
+    * round's bloom batch. */
   var workPhaseSec: Double = 0.0
   private var snapshot: Option[SnapshotStore.Snapshot] = None
   private val bloom = new SeenFilter.SeenBloom()
@@ -185,34 +192,38 @@ final class CrawlDriver(
           s"leaf finalization wedged >30min (round $roundNo)", e)
     }
 
-  /** Count the folds' leaves, then `more` leaves, in ONE job: with a
-    * store through materializeAndCount, which also yields the staged
-    * parts' buckets; without one over the leaves' row RDDs, which compiles
-    * no scan classes. Each fold takes its own leaves' counts and buckets;
-    * returns the counts of `more`. */
-  private def countFolds(folds: Seq[Fold[_]], more: Dataset[_]*): Seq[Long] = {
-    val leaves = folds.flatMap(_.leaves) ++ more.map(_ -> lit(0))
-    val counted =
-      if (track) materializeAndCount(leaves)
-      else StateLeaf.countRows(leaves.map(_._1)).map(_ -> Set.empty[Int])
-    folds.foldLeft(counted) { (rest, f) =>
+  /** Count the folds' leaves, then `more` leaves, in ONE job: a tracked
+    * table's update and insert leaves through a projection of its bucket
+    * column, which also yields their changed buckets, every other leaf over
+    * its row RDD, which compiles no scan classes. Each fold takes its own
+    * leaves' counts and buckets. The same job folds the url_hash values of
+    * the `frontier` fold's insert leaf (the new seen keys) into a
+    * seen-bloom batch, which is merged here, after the count and before
+    * any fold applies. Returns the counts of `more`. */
+  private def countFolds(folds: Seq[Fold[_]],
+                         frontier: Option[Fold[FrontierEntry]],
+                         more: Dataset[_]*): Seq[Long] = {
+    val (counted, batch) = StateLeaf.count(
+      folds.flatMap(_.leaves) ++ more.map(_ -> None),
+      frontier.flatMap(_.insert).map(_ -> bloom.batchFactory))
+    val rest = folds.foldLeft(counted) { (rest, f) =>
       val (own, next) = rest.splitAt(f.leaves.size)
       f.counted(own)
       next
-    }.map(_._1)
+    }
+    for (f <- frontier; b <- batch if f.insertRows > 0)
+      bloom.mergeBatch(b, f.insertRows)
+    rest.map(_._1)
   }
 
   /** A change between rounds (mq transition, partition label). */
   private def change(fold: Future[Fold[_]]): Unit = {
     val f = await(fold)
-    countFolds(Seq(f))
+    countFolds(Seq(f), None)
     f.apply()
   }
 
   // ------------------------------------------------------------------ seeds
-
-  private def mergeBloomFrom(keys: Dataset[String], n: Long): Unit =
-    if (n > 0) bloom.mergeBatch(SeenFilter.buildBloom(keys, bloom), n)
 
   /** Seed injection ≈ crawler-add (reference: crawler/add.c:44-209;
     * insert-if-absent db.c:1202-1294, force upsert db.c:1219-1231). */
@@ -239,14 +250,12 @@ final class CrawlDriver(
     val f = await(fState.fold(forced, Some(entries
       .join(fv.select("url_hash"), Seq("url_hash"), "left_anti")
       .as[FrontierEntry])))
-    val ins = f.insert.get
-    val h = await(hState.fold(None, Some(ins
+    val h = await(hState.fold(None, Some(f.insert.get
       .flatMap(e => Step.newHostEntry(e.url, now, bcCfg.value))
       .dropDuplicates("root_hash")
       .join(hosts.select("root_hash"), Seq("root_hash"), "left_anti")
       .as[HostEntry])))
-    countFolds(Seq(f, h))
-    mergeBloomFrom(ins.select("url_hash").as[String], f.insertRows)
+    countFolds(Seq(f, h), Some(f))
     f.apply()
     h.apply()
   }
@@ -280,8 +289,9 @@ final class CrawlDriver(
   }
 
   /** Fold a round's deltas in: each table pairs with its delta once, all
-    * leaves (and the trace's) build on the leaf pool, one job counts them,
-    * the bloom takes the discovered keys, and then every fold applies. */
+    * leaves (and the trace's) build on the leaf pool, one job counts them
+    * and builds the bloom batch of the discovered keys, the bloom takes the
+    * batch, and then every fold applies. */
   private def foldRound(res: CrawlRound.RoundResult): Unit = {
     val trF = Future(StateLeaf.deltaLeaf(res.trace))
     val fF = fState.fold(Some(res.updatedFrontier), Some(res.newFrontier))
@@ -291,10 +301,8 @@ final class CrawlDriver(
       eState.fold(res.extractedDelta),
       pState.fold(res.pagesDelta))))
     val (f, tr) = (await(fF), await(trF))
-    val (trRows, matSec) = timed(countFolds(folds, tr).head)
-    val (_, bloomSec) = timed(mergeBloomFrom(
-      f.insert.get.select("url_hash").as[String], f.insertRows))
-    workPhaseSec += matSec + bloomSec
+    val (trRows, matSec) = timed(countFolds(folds, Some(f), tr).head)
+    workPhaseSec += matSec
 
     folds.foreach(_.apply())
     traceParts :+= StateLeaf.sized(tr, trRows)
@@ -307,24 +315,6 @@ final class CrawlDriver(
 
   /** The round number the latest snapshot was committed (or resumed) at. */
   private var checkpointedRound: Long = -1L
-
-  /** Materialize leaves and count each — ONE Spark job over a tagged
-    * union (scanning `(lit(tag), bucket)` off a persisted plan populates
-    * its cache; the heavy shared subtrees — step output, seen filter —
-    * compute exactly once under the cache locks). The same job yields each
-    * leaf's bucket set for the COW snapshot commit. */
-  private def materializeAndCount(parts: Seq[(Dataset[_], Column)])
-      : Seq[(Long, Set[Int])] = {
-    val tagged = parts.zipWithIndex.map { case ((ds, b), i) =>
-      ds.toDF().select(lit(i.toString).as("part"), b.as("bucket")) }
-      .reduce(_ unionByName _)
-    val byPart = tagged.groupBy("part", "bucket").count().collect()
-      .groupBy(_.getString(0))
-    parts.indices.map { i =>
-      val rows = byPart.getOrElse(i.toString, Array.empty[Row])
-      (rows.map(_.getLong(2)).sum, rows.map(_.getInt(1)).toSet)
-    }
-  }
 
   private def maybeCompact(): Unit = {
     tables.foreach(t => if (t.needsCompaction) t.compact())
@@ -405,7 +395,8 @@ final class CrawlDriver(
     roundNo = snap.round
     checkpointedRound = snap.round
     lastNow = snap.now
-    mergeBloomFrom(fState.keys, fState.rows) // rebuild seen-bloom from state
+    if (fState.rows > 0) // rebuild the seen bloom from state
+      bloom.mergeBatch(SeenFilter.buildBloom(fState.keys, bloom), fState.rows)
     true
   }
 

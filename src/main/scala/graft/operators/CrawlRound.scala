@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, explode, expr, lit}
+import org.apache.spark.sql.functions.{array, coalesce, col, explode, expr, lit}
 import graft.core._
 import graft.functions.Urls
 
@@ -183,6 +183,29 @@ object CrawlRound {
   }
 
   /**
+   * The distinct canonical outlinks of a round's step output. canon_key is
+   * the native codegen'd canonicalize+hash: the outlink stream (~15× the
+   * page count, the round's densest row stream) stays columnar through
+   * canonicalize+hash+dedup with zero String materialization on the
+   * already-canonical fast path (functions/UrlKey.scala; parity pinned by
+   * UrlKeySpec, end-to-end by the trace/seen-set suites). It runs once
+   * per outlink: its key is exploded from a one-element array, and the
+   * optimizer pushes no filter on a generator's output below the
+   * generator, where a plain projection would let `isNotNull` be pushed
+   * below it and compute canon_key a second time.
+   */
+  def candidates(stepOuts: DataFrame): Dataset[SeenFilter.Candidate] = {
+    import stepOuts.sparkSession.implicits._
+    stepOuts
+      .select(explode(col("outlinks")).as("raw"))
+      .select(explode(array(expr("canon_key(raw)"))).as("ck"))
+      .filter(col("ck").isNotNull)
+      .select(col("ck.url_hash").as("url_hash"), col("ck.url").as("url"))
+      .distinct() // url_hash ↔ url is one-to-one: a key-only hash aggregate
+      .as[SeenFilter.Candidate]
+  }
+
+  /**
    * Execute one round: runs the step job (materializing the step output
    * leaf, whose row count is the picks count) and returns the delta plans.
    */
@@ -357,26 +380,10 @@ object CrawlRound {
       .as[TraceKeyed]
 
     // --- 5. discovered URLs: canonicalize → seen-filter → insert ---------
-    // canon_key is the native codegen'd canonicalize+hash: the outlink
-    // stream (~15× the page count, the round's densest row stream) stays
-    // columnar through canonicalize+hash+dedup with zero String
-    // materialization on the already-canonical fast path
-    // (functions/UrlKey.scala; parity pinned by UrlKeySpec, end-to-end by
-    // the trace/seen-set suites).
-    val candidates: Dataset[SeenFilter.Candidate] = stepOuts
-      .select(explode(col("outlinks")).as("raw"))
-      .select(expr("canon_key(raw)").as("ck"))
-      .filter(col("ck").isNotNull)
-      .select(col("ck.url_hash").as("url_hash"), col("ck.url").as("url"))
-      .distinct() // url_hash ↔ url is one-to-one: a key-only hash aggregate
-      .as[SeenFilter.Candidate]
-
-    // The seen filter's level-2 output feeds two branches of one plan
-    // (a leaf, so the cuckoo build runs once), then one typed step turns
-    // each genuinely new url into its frontier row and its host row (a
-    // leaf, because both deltas read it).
+    // One typed step turns each genuinely new url into its frontier row
+    // and its host row (a leaf, because both deltas read it).
     val discovered = roundLeaf(SeenFilter
-      .filterNew(spark, candidates, seenKeys, bloom, share = roundLeaf)
+      .filterNew(spark, candidates(stepOuts), seenKeys, bloom)
       .flatMap(c => Step.newFrontierEntryFromCanon(c.url, c.url_hash, now)
         .map(f => (f, Step.newHostEntry(c.url, now, bcCfg.value))))
       .toDF("f", "h"))

@@ -18,11 +18,13 @@ import org.apache.spark.util.sketch.BloomFilter
  *      the hash bucket: seen hashes of the bucket are folded into a compact
  *      16-bit-fingerprint cuckoo table (~2.3 bytes/key vs 32-byte strings),
  *      candidates missing from it are also definitely new;
- *   3. the authoritative **left-anti join** for the (small) residue the
- *      cuckoo might-contains.
+ *   3. the authoritative **exact probe** for the (small) residue the
+ *      cuckoo might-contains, inside the same cogroup: a binary search of
+ *      the bucket's seen hashes, which the task has buffered anyway.
  *
  * All three levels are conservative (no false "new"): correctness never
- * depends on the sketches, only shuffle volume does. At 10^10 frontier
+ * depends on the sketches. Levels 2 and 3 share one co-partitioned task,
+ * so the seen set is shuffled once per call. At 10^10 frontier
  * scale the bloom is epoch-partitioned (one filter per insert epoch,
  * bounded bits each) — `SeenBloom` below keeps that family.
  */
@@ -121,7 +123,15 @@ object SeenFilter {
     private var filters: List[BloomFilter] = Nil
     private var currentCount = 0L
 
-    def emptyBatch(): BloomFilter = BloomFilter.create(epochCapacity, fpp)
+    def emptyBatch(): BloomFilter = batchFactory()
+
+    /** Makes empty batches with this family's parameters; it captures only
+      * those, so a task closure that builds batches does not ship the
+      * family's filters. */
+    def batchFactory: () => BloomFilter = {
+      val (n, p) = (epochCapacity, fpp)
+      () => BloomFilter.create(n, p)
+    }
 
     /** Merge a batch filter — must be built via `emptyBatch()`/`buildBloom`
       * with THIS family's parameters (equal bit size). */
@@ -195,24 +205,20 @@ object SeenFilter {
 
   /**
    * The full seen-filter pipeline: returns candidates NOT present in
-   * `seenHashes`. `bloom` may be null (skip level 1). Level 2 cogroups on
-   * `shorthash % buckets` so each cuckoo table covers one co-partitioned
-   * slice of the frontier.
+   * `seenHashes` (duplicates kept). `bloom` may be null (skip level 1).
+   * Levels 2 and 3 run in one cogroup on `shorthash % buckets`, so each
+   * cuckoo table covers one co-partitioned slice of the seen set.
    *
    * Columnar around the one typed cogroup: level 1 probes the bloom
-   * through a UDF and the level-2 flag splits rows with column filters, so
-   * the plan decodes no `Candidate` objects outside the cogroup. Level 2's
-   * output feeds two branches; `share` decides how they share it. The
-   * default recomputes the cogroup per branch. A caller that persists it
-   * there owns the cache and unpersists it after its last action.
+   * through a UDF and the cogroup's seen flag drops rows with a column
+   * filter, so the plan decodes no `Candidate` objects outside it.
    */
   def filterNew(
       spark: SparkSession,
       candidates: Dataset[Candidate],
       seenHashes: Dataset[String],
       bloom: SeenBloom,
-      buckets: Int = 32,
-      share: DataFrame => DataFrame = identity): Dataset[Candidate] = {
+      buckets: Int = 32): Dataset[Candidate] = {
     import spark.implicits._
     val cands = candidates.toDF()
 
@@ -232,38 +238,44 @@ object SeenFilter {
          cands.filter(maybeSeen(col("url_hash"))))
       }
 
-    // Level 2: passedCuckoo=false → definitely new.
-    val refined = share(
-      cuckooRefine(spark, possiblySeen.as[Candidate], seenHashes, buckets)
-        .select(col("_1.url_hash").as("url_hash"), col("_1.url").as("url"),
-          col("_2").as("passed")))
-    // split by_ref, so both halves run one generated class
-    def passed(p: Boolean) = refined.filter(col("passed").cast("long") ===
-      graft.functions.ByRef.col(spark, if (p) 1L else 0L)).drop("passed")
-    val cuckooNew = passed(false)
-    val residue   = passed(true)
+    // Levels 2 and 3: new unless the exact probe finds it
+    val unseen = probe(spark, possiblySeen, seenHashes, buckets)
+      .filter(!col("_3"))
+      .select(col("_1.url_hash").as("url_hash"), col("_1.url").as("url"))
 
-    // Level 3: authoritative anti-join for the residue.
-    val exactNew = residue
-      .join(seenHashes.toDF("url_hash"), Seq("url_hash"), "left_anti")
-
-    definitelyNew.unionByName(cuckooNew).unionByName(exactNew).as[Candidate]
+    definitelyNew.unionByName(unseen).as[Candidate]
   }
 
-  /**
-   * Level 2: cuckoo refinement per hash bucket (typed cogroup — both sides
-   * shuffle on the same key, so the exchange is shared with the level-3
-   * join's partitioning). The bucket's seen hashes are buffered so the
-   * cuckoo table is sized from the ACTUAL count (a fixed-capacity table
-   * saturates on big buckets, spilling every further key to the overflow
-   * set and degrading to a slow hash-set); the buffer is one bucket's keys,
-   * bounded by choosing `buckets` so a slice fits task memory.
-   */
+  /** Level 2 alone: each candidate with whether the cuckoo table of its
+    * bucket might contain it — [[probe]]'s first flag. */
   def cuckooRefine(
       spark: SparkSession,
       candidates: Dataset[Candidate],
       seenHashes: Dataset[String],
       buckets: Int): Dataset[(Candidate, Boolean)] = {
+    import spark.implicits._
+    probe(spark, candidates.toDF(), seenHashes, buckets)
+      .select(col("_1"), col("_2")).as[(Candidate, Boolean)]
+  }
+
+  /**
+   * Levels 2 and 3 per hash bucket, in one typed cogroup (both sides
+   * shuffle on the bucket). Each candidate comes out with two flags: the
+   * bucket's cuckoo table might contain it (level 2), and the bucket's
+   * seen hashes do contain it (level 3, an exact probe run only when level
+   * 2 says "might"). The bucket's seen hashes are buffered so the cuckoo
+   * table is sized from the ACTUAL count (a fixed-capacity table
+   * saturates on big buckets, spilling every further key to the overflow
+   * set and degrading to a slow hash-set), and the exact probe searches
+   * the same buffer, sorted once the first candidate needs it; the buffer
+   * is one bucket's keys, bounded by choosing `buckets` so a slice fits
+   * task memory.
+   */
+  private def probe(
+      spark: SparkSession,
+      candidates: DataFrame,
+      seenHashes: Dataset[String],
+      buckets: Int): Dataset[(Candidate, Boolean, Boolean)] = {
     import spark.implicits._
     // bucket = shorthash % buckets, keyed by column so no row decodes
     // before the cogroup itself. The seen side rides as Candidate rows
@@ -276,13 +288,18 @@ object SeenFilter {
         buckets).cast("string").as("bucket")).as[String, Candidate]
     val seen = seenHashes.toDF("url_hash")
       .withColumn("url", lit(null).cast("string"))
-    byBucket(candidates.toDF()).cogroup(byBucket(seen)) { (_, cands, seen) =>
-      val arr = seen.map(_.url_hash).toArray
-      if (arr.isEmpty) cands.map(c => (c, false))
+    byBucket(candidates).cogroup(byBucket(seen)) { (_, cands, seen) =>
+      val arr: Array[AnyRef] = seen.map(_.url_hash).toArray
+      if (arr.isEmpty) cands.map(c => (c, false, false))
       else {
         val cf = new CuckooFilter(arr.length)
-        arr.foreach(cf.insert)
-        cands.map(c => (c, cf.mightContain(c.url_hash)))
+        arr.foreach(h => cf.insert(h.asInstanceOf[String]))
+        lazy val sorted = { java.util.Arrays.sort(arr); arr }
+        cands.map { c =>
+          val maybe = cf.mightContain(c.url_hash)
+          (c, maybe,
+            maybe && java.util.Arrays.binarySearch(sorted, c.url_hash) >= 0)
+        }
       }
     }
   }

@@ -333,8 +333,8 @@ object DedupOps {
     * in the corpus, one survivor per hash (min doc_id), with the batch
     * duplicate count. Reuses the crawl engine's U1/J2 seen-filter stack
     * verbatim (broadcast bloom prefilter → per-partition cuckoo refinement
-    * → authoritative anti-join, operators/SeenFilter.scala): all three
-    * levels are conservative, so the result is exact and the DuckDB
+    * → exact probe in the same cogroup, operators/SeenFilter.scala): all
+    * three levels are conservative, so the result is exact and the DuckDB
     * anti-join oracle reproduces it, while at 10^10-document scale the
     * bloom drops almost every already-seen batch doc without a shuffle. */
   def incrDedupExact(s: SparkSession, dir: String): DataFrame = {
@@ -342,8 +342,8 @@ object DedupOps {
     val t = thresholdVal(docs(s, dir))
     val d = docs(s, dir).select(col("doc_id"),
       substring(sha2(col("text"), 256), 1, 32).as("text_hash"))
-    // persisted: four consumers (count, bloom build, cuckoo cogroup seen
-    // side, authoritative anti-join) — without it each action re-scans
+    // persisted: three consumers (count, bloom build, the seen side of the
+    // cogroup that runs levels 2 and 3) — without it each action re-scans
     // the parquet and re-hashes the corpus text (guide §5: cache what is
     // reused across actions; exchange reuse never crosses actions)
     val corpus = d.filter(col("doc_id") < t)
@@ -355,8 +355,7 @@ object DedupOps {
     val cands = batch.select(col("text_hash").as("url_hash"),
       col("doc_id").cast("string").as("url"))
       .as[graft.operators.SeenFilter.Candidate].persist()
-    graft.operators.SeenFilter.filterNew(s, cands, corpus, bloom,
-        share = _.persist())
+    graft.operators.SeenFilter.filterNew(s, cands, corpus, bloom)
       .toDF()
       .groupBy(col("url_hash").as("text_hash"))
       .agg(min(col("url").cast("long")).as("keep_id"),

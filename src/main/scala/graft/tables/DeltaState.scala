@@ -2,7 +2,7 @@ package graft.tables
 
 import scala.concurrent.{ExecutionContext, Future}
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /**
  * One durable crawl table (frontier, hosts, fetch_log, extracted, pages):
@@ -81,15 +81,18 @@ final class Fold[T] private[tables] (table: CrawlTable[T], track: Boolean,
     update: Option[Dataset[T]], overlay: Option[(Dataset[T], Long => Unit)],
     val insert: Option[Dataset[T]]) {
 
-  // untracked, the update leaf is not counted: the overlay reads it
-  private val parts: Seq[(Option[Dataset[T]], Column)] = Seq(
-    update.filter(_ => track) -> table.bucketCol,
-    overlay.map(_._1) -> lit(0),
-    insert -> table.bucketCol)
+  // untracked, the update leaf is not counted (the overlay reads it) and
+  // no part is bucketed
+  private val bucket = Some(table.bucketCol).filter(_ => track)
+  private val parts: Seq[(Option[Dataset[T]], Option[Column])] = Seq(
+    update.filter(_ => track) -> bucket,
+    overlay.map(_._1) -> None,
+    insert -> bucket)
   private var counts: Seq[Option[(Long, Set[Int])]] = Nil
 
-  /** The leaves to count, each with the column that buckets its rows. */
-  def leaves: Seq[(Dataset[_], Column)] =
+  /** The leaves to count, each with the column that buckets its rows when
+    * the table stages them for a commit. */
+  def leaves: Seq[(Dataset[_], Option[Column])] =
     parts.collect { case (Some(leaf), b) => (leaf, b) }
 
   /** Take the row count and bucket set of each of [[leaves]], in order. */
@@ -187,14 +190,15 @@ final class DeltaState[T](
       .as[T](enc)
       .unionByName(updates)
 
-  /** Swap in a materialized overlay. Overlays are plan-truncated state
+  /** Swap in a materialized overlay of `n` rows, which it carries as its
+    * statistics. Overlays are plan-truncated state
     * leaves ([[StateLeaf]]), and Dataset.unpersist is a no-op for them
     * (the blocks are RDD-level, never CacheManager entries) — the old
     * overlay's storage is reclaimed by the ContextCleaner once the new
     * overlay (which references it only through already-computed data, not
     * lineage) drops the last reference. */
   def swapOverlay(newOverlay: Dataset[T], n: Long): Unit = {
-    overlay = newOverlay
+    overlay = StateLeaf.counted(newOverlay, n)
     overlayRows = n
   }
 
@@ -224,12 +228,12 @@ final class DeltaState[T](
   protected[tables] def addPart(part: Dataset[T], rows: Long): Unit =
     addInserts(part, rows)
 
-  /** Replace everything with a materialized base (seed bulk-load, resume,
-    * compaction). */
+  /** Replace everything with a materialized base of `n` rows, which it
+    * carries as its statistics (resume, compaction). */
   def setBase(b: Dataset[T], n: Long): Unit = {
     overlay.unpersist()
     inserts.foreach(_.unpersist())
-    base = b
+    base = StateLeaf.counted(b, n)
     baseRows = n
     overlay = spark.emptyDataset[T](enc)
     inserts = Vector.empty

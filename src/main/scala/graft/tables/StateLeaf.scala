@@ -1,8 +1,10 @@
 package graft.tables
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.BatchedLeaf
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.sketch.BloomFilter
 
 /**
  * The one place that decides HOW a round-state plan becomes a logical
@@ -16,6 +18,12 @@ import org.apache.spark.storage.StorageLevel
  * Leaves are LAZY (plan truncates immediately, data materializes in the
  * round's single counting job), with an eager variant for compaction /
  * resume bulk loads.
+ *
+ * A leaf the driver has counted carries that count as its statistics
+ * ([[counted]]: the row count and rows × the schema's default row width),
+ * so Catalyst plans a broadcast-hash join on a small counted side and a
+ * shuffle on a large one. A leaf not yet counted keeps the capped
+ * estimate of `BatchedLeaf.capStats`, so estimates never compound.
  */
 object StateLeaf {
 
@@ -35,15 +43,18 @@ object StateLeaf {
     lazyLeaf(ds, levelFor(ds.sparkSession))
 
   /** Eager leaf (compaction, resume bulk loads, trace bases): data is
-    * materialized before this returns. */
+    * materialized, and counted, before this returns. */
   def eagerLeaf[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
     val l = BatchedLeaf(ds, level)
-    l.count(): Unit
-    l
+    counted(l, countRows(Seq(l)).head)
   }
 
   def eagerLeaf[T](ds: Dataset[T]): Dataset[T] =
     eagerLeaf(ds, levelFor(ds.sparkSession))
+
+  /** The leaf carrying `rows` counted rows as its statistics. */
+  def counted[T](leaf: Dataset[T], rows: Long): Dataset[T] =
+    BatchedLeaf.withCount(leaf, rows)
 
   /** A change's leaf: lazy, and coalesced to the session parallelism
     * BEFORE it is stored — an overlay is re-composed (old ∪ delta) on
@@ -57,11 +68,11 @@ object StateLeaf {
   /** A counted leaf in as many partitions as its rows need (one per 200k,
     * at most the session parallelism): a narrow zero-copy view that stays
     * a leaf, so a 2k-row delta does not cost 64 tasks on every later scan
-    * of the parts it joins. */
+    * of the parts it joins. It carries the count. */
   def sized[T](leaf: Dataset[T], rows: Long): Dataset[T] = {
     val par = leaf.sparkSession.sparkContext.defaultParallelism.toLong
-    BatchedLeaf.coalesce(leaf,
-      math.max(1L, math.min(par, rows / 200000L + 1L)).toInt)
+    counted(BatchedLeaf.coalesce(leaf,
+      math.max(1L, math.min(par, rows / 200000L + 1L)).toInt), rows)
   }
 
   /** Union of same-schema parts: one leaf scan when every part is a leaf
@@ -75,18 +86,56 @@ object StateLeaf {
     * row RDDs. Counting a leaf through SQL instead would compile a scan
     * class per leaf schema; this job runs no generated code. */
   def countRows(leaves: Seq[Dataset[_]]): Seq[Long] =
-    if (leaves.isEmpty) Nil
+    count(leaves.map(_ -> None))._1.map(_._1)
+
+  /** [[countRows]] that also yields, for each leaf given a bucket column,
+    * the set of buckets its rows fall in (read through a projection of
+    * that column), and folds the `url_hash` values of `bloom`'s leaf (one
+    * of `leaves`) into one filter per partition from `bloom`'s factory;
+    * the partitions' filters are merged here. Still ONE job. */
+  def count(leaves: Seq[(Dataset[_], Option[Column])],
+            bloom: Option[(Dataset[_], () => BloomFilter)] = None)
+      : (Seq[(Long, Set[Int])], Option[BloomFilter]) =
+    if (leaves.isEmpty) (Nil, None)
     else {
-      val perPartition = leaves.head.sparkSession.sparkContext.union(
-        leaves.map(BatchedLeaf.rowsOf).zipWithIndex.map { case (rows, i) =>
+      require(bloom.forall(b => leaves.exists(_._1 eq b._1)),
+        "the bloom leaf is not among the counted leaves")
+      val perPartition = leaves.head._1.sparkSession.sparkContext.union(
+        leaves.zipWithIndex.map { case ((leaf, bucket), i) =>
+          val newBloom = bloom.collect { case (l, f) if l eq leaf => f }
+          val (rows, bucketAt, hashAt) = bucket match {
+            case Some(b) =>
+              val cols = b.as("bucket") +: newBloom.map(_ => col("url_hash")).toSeq
+              (leaf.toDF().select(cols: _*).queryExecution.toRdd, 0, 1)
+            case None =>
+              (BatchedLeaf.rowsOf(leaf), -1,
+                newBloom.fold(-1)(_ => leaf.schema.fieldIndex("url_hash")))
+          }
+          val mkBloom = newBloom.orNull
           rows.mapPartitions { it =>
             var n = 0L
-            while (it.hasNext) { it.next(); n += 1 }
-            Iterator.single((i, n))
+            val buckets = scala.collection.mutable.HashSet.empty[Int]
+            val bf = if (mkBloom == null) null else mkBloom()
+            while (it.hasNext) {
+              val r = it.next()
+              n += 1
+              if (bucketAt >= 0 && !r.isNullAt(bucketAt))
+                buckets += r.getInt(bucketAt)
+              if (bf != null && !r.isNullAt(hashAt))
+                bf.putBinary(r.getUTF8String(hashAt).getBytes)
+            }
+            Iterator.single((i, n, buckets.toSet, Option(bf).filter(_ => n > 0)))
           }
         }).collect()
-      leaves.indices.map(i =>
-        perPartition.iterator.filter(_._1 == i).map(_._2).sum)
+      val counts = leaves.indices.map { i =>
+        val own = perPartition.filter(_._1 == i)
+        (own.map(_._2).sum, own.flatMap(_._3).toSet)
+      }
+      val merged = bloom.map { case (_, newBloom) =>
+        perPartition.flatMap(_._4).reduceOption(_ mergeInPlace _)
+          .getOrElse(newBloom())
+      }
+      (counts, merged)
     }
 
   /** Drop a leaf's stored rows now rather than when the ContextCleaner

@@ -80,7 +80,8 @@ object PlanDump {
     }
     dump("Round trace (dequeue → fetch → process; NO sort in the hot path)",
       "Typed groupByKey+flatMapGroups per-host top-1 over the frontier⋈hosts " +
-      "join (AQE picks broadcast for the small eligible-host side), " +
+      "join (a static broadcast-hash join: the host leaves are counted, " +
+      "and small), " +
       "left-outer joins against pages/fetch_log/robots, then one " +
       "mapPartitions running the shared Step semantics (X7 header parse " +
       "included). Emission order lives in the carried k1..k4 keys; the " +
@@ -89,6 +90,8 @@ object PlanDump {
     dump("Frontier INSERT delta (URL-seen filtered discoveries)",
       "Only the round's newly-discovered rows — the driver's DeltaState " +
       "folds them as an insert part; no full-table merge appears anywhere. " +
+      "The seen filter's levels 2 and 3 are one cogroup: one exchange of " +
+      "the seen keys. " +
       "The ExistingRDD scans are the round-internal leaves (each " +
       "expensive subtree evaluated exactly once).", res.newFrontier)
     dump("Frontier UPDATE delta (pruned from the step leaf)",

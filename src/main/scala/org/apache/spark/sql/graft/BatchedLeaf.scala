@@ -5,6 +5,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
@@ -167,19 +168,48 @@ object BatchedLeaf {
     ds.asInstanceOf[CDataset[_]].queryExecution.analyzed
       .isInstanceOf[LogicalRDD]
 
+  private def capped(conf: org.apache.spark.sql.internal.SQLConf,
+                     size: BigInt): Statistics =
+    Statistics(size.min(BigInt(conf.defaultSizeInBytes)))
+
+  /** A leaf over `rows` with the parts' output: counted when every part
+    * is, with their summed count, else with their capped summed size. */
   private def withRows[T](like: Dataset[T], plans: Seq[LogicalRDD],
                           rows: RDD[InternalRow]): Dataset[T] = {
     val cds = like.asInstanceOf[CDataset[T]]
-    val stats = Statistics(sizeInBytes = plans.map(_.stats.sizeInBytes).sum
-      .min(BigInt(cds.sparkSession.sessionState.conf.defaultSizeInBytes)))
+    val stats = plans.map(_.stats)
+    val size = stats.map(_.sizeInBytes).sum
+    val carried =
+      if (stats.forall(_.rowCount.isDefined))
+        Statistics(size, Some(stats.flatMap(_.rowCount).sum))
+      else capped(plans.head.conf, size)
     val leaf = LogicalRDD(plans.head.output.map(_.newInstance()), rows)(
-      cds.sparkSession, Some(stats), None)
+      cds.sparkSession, Some(carried), None)
     new CDataset[T](cds.sparkSession, leaf, cds.exprEnc)
   }
 
+  /** The same leaf with other statistics. */
+  private def withStats[T](ds: Dataset[T], stats: Statistics): Dataset[T] = {
+    val cds = ds.asInstanceOf[CDataset[T]]
+    val fresh = leafOf(ds).newInstance()
+    new CDataset[T](cds.sparkSession,
+      fresh.copy()(cds.sparkSession, Some(stats), None), cds.exprEnc)
+  }
+
+  /** The leaf with the statistics of `rows` counted rows: the row count
+    * and a size of `rows` × the schema's default row width, so the planner
+    * broadcasts a counted leaf below `spark.sql.autoBroadcastJoinThreshold`
+    * instead of shuffling both sides of its join. A row count on a leaf
+    * always comes from here: an uncounted leaf carries none. */
+  def withCount[T](ds: Dataset[T], rows: Long): Dataset[T] =
+    withStats(ds, Statistics(
+      EstimationUtils.getSizePerRow(leafOf(ds).output) * rows,
+      Some(BigInt(rows))))
+
   /** One leaf over the rows of same-schema leaves. A SQL union of leaves
     * compiles a scan stage per distinct part plan into every query that
-    * reads it; this leaf is one scan of the concatenated partitions. */
+    * reads it; this leaf is one scan of the concatenated partitions. Its
+    * row count is the parts' sum when every part is counted. */
   def concat[T](parts: Seq[Dataset[T]]): Dataset[T] = {
     val plans = parts.map(leafOf)
     withRows(parts.head, plans,
@@ -187,7 +217,8 @@ object BatchedLeaf {
   }
 
   /** The leaf's rows in at most `n` partitions, still a leaf (a narrow
-    * RDD coalesce — zero-copy once the rows are stored). */
+    * RDD coalesce — zero-copy once the rows are stored) with the same
+    * statistics. */
   def coalesce[T](ds: Dataset[T], n: Int): Dataset[T] = {
     val plan = leafOf(ds)
     withRows(ds, Seq(plan), plan.rdd.coalesce(n))
@@ -251,13 +282,17 @@ object BatchedLeaf {
 
   /** The leaf with its size estimate capped at the session's default
     * size (`spark.sql.defaultSizeInBytes`, the estimate of a relation of
-    * unknown size). A leaf inherits the estimate of the plan it stores,
-    * and join estimates multiply, so without a cap every round's leaves
-    * would square the estimate of the last: after ~20 rounds the planner
-    * spends minutes in BigInteger multiplication. */
+    * unknown size) and no row count. A leaf inherits the estimate of the
+    * plan it stores, and join estimates multiply (row counts too), so
+    * without a cap every round's leaves would square the estimate of the
+    * last: after ~20 rounds the planner spends minutes in BigInteger
+    * multiplication. The cap holds until the leaf is counted
+    * ([[withCount]]); a counted leaf's estimate comes from its rows, never
+    * from the plan it stored. */
   private def capStats[T](ds: Dataset[T]): Dataset[T] = {
     val plan = leafOf(ds)
-    if (plan.stats.sizeInBytes <= plan.conf.defaultSizeInBytes) ds
-    else withRows(ds, Seq(plan), plan.rdd)
+    val st = plan.stats
+    if (st.rowCount.isEmpty && st.sizeInBytes <= plan.conf.defaultSizeInBytes) ds
+    else withStats(ds, capped(plan.conf, st.sizeInBytes))
   }
 }

@@ -76,4 +76,20 @@ class UrlKeySpec extends SparkTestBase {
     assert(gen.exists(s => reference(s).isEmpty) ||
            gen.exists(s => reference(s).exists(_._2 != s)))
   }
+
+  test("a round's candidate plan computes canon_key once per outlink") {
+    // a filter on a projected canon_key is pushed below the projection and
+    // computes it again; CrawlRound.candidates must keep one
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val outs = Seq(Seq("http://a.example.org/x", "not a url", ""),
+      Seq("http://A.example.org/x", "http://b.example.org/")).toDF("outlinks")
+    val cands = graft.operators.CrawlRound.candidates(outs)
+    val plan = cands.queryExecution.optimizedPlan
+    val keys = plan.collect { case p =>
+      p.expressions.map(_.collect { case k: CanonKey => k }.size).sum }.sum
+    assert(keys == 1, plan)
+    assert(cands.collect().map(_.url).toSeq.sorted ==
+      Seq("http://a.example.org/x", "http://b.example.org/"))
+  }
 }

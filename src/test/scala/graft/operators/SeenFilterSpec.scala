@@ -83,4 +83,33 @@ class SeenFilterSpec extends SparkTestBase {
     assert(family.mightContain(f"${42}%032x"))
     assert(!(0 until 1000).forall(i => family.mightContain(f"${i + 10000}%032x")))
   }
+
+  test("levels 2 and 3 in one cogroup ≡ the exact set difference, " +
+       "duplicates kept, cuckoo false positives included") {
+    import spark.implicits._
+    // one bucket holding every seen hash, and new candidates that a cuckoo
+    // table over the same hashes might contain, so the exact probe decides
+    val seen = (0 until 50000).map(i => f"$i%032x")
+    val local = new CuckooFilter(seen.size)
+    seen.foreach(local.insert)
+    val lookalikes = Iterator.from(1000000).map(i => f"$i%032x")
+      .filter(local.mightContain).take(40).toSeq
+    val fresh = (50000 until 50100).map(i => f"$i%032x")
+    val hashes = lookalikes ++ fresh ++ seen.take(300)
+    // some hashes repeated, as q15's batch documents can share a hash
+    val cands = (hashes ++ hashes.take(150)).zipWithIndex.map { case (h, i) =>
+      Candidate(h, s"doc$i") }
+    val seenSet = seen.toSet
+    val expected = cands.filterNot(c => seenSet(c.url_hash)).sortBy(_.url)
+
+    val seenDs = seen.toDS()
+    val candDs = cands.toDS()
+    val passedNew = SeenFilter.cuckooRefine(spark, candDs, seenDs, buckets = 1)
+      .collect().count { case (c, maybe) => maybe && !seenSet(c.url_hash) }
+    assert(passedNew > 0, "no new candidate reached the exact probe")
+
+    val got = SeenFilter.filterNew(spark, candDs, seenDs, null, buckets = 1)
+      .collect().toSeq.sortBy(_.url)
+    assert(got == expected)
+  }
 }

@@ -1,8 +1,11 @@
 package graft.tables
 
 import graft.SparkTestBase
-import org.apache.spark.sql.graft.SparkInternals
-import org.apache.spark.sql.execution.LogicalRDD
+import graft.operators.SeenFilter
+import org.apache.spark.sql.graft.{BatchedLeaf, SparkInternals}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -17,7 +20,10 @@ import org.apache.spark.storage.StorageLevel
  *     independent and immutable across scans and within joins);
  *  4. wide rows exercise the slab-growth path (row > initial 64 KiB buf);
  *  5. eager variant materializes without changing results;
- *  6. jobs a leaf starts while it is built name the calling code.
+ *  6. jobs a leaf starts while it is built name the calling code;
+ *  7. a counted leaf's statistics are its count, an uncounted leaf's are
+ *     capped, and the planner broadcasts a small counted leaf;
+ *  8. the counting job's bloom batch is the one `buildBloom` builds.
  */
 case class StateLeafNested(a: Long, b: String)
 case class StateLeafWide(id: Long, s: String, maybe: Option[String],
@@ -165,5 +171,107 @@ class StateLeafSpec extends SparkTestBase {
     details.forEach(d => assert(
       d.linesIterator.exists(programFrame.findFirstIn(_).isDefined),
       s"job stage without a program frame:\n$d"))
+  }
+
+  private def stats(ds: org.apache.spark.sql.Dataset[_]) =
+    ds.queryExecution.optimizedPlan.stats
+
+  /** Run `f` with the given SQL confs set, restoring them after. */
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** A leaf whose plan Catalyst estimates far above any threshold (a
+    * cross join of two 10^5-row ranges, never executed). */
+  private def uncounted() = StateLeaf.lazyLeaf(spark.range(100000)
+    .crossJoin(spark.range(100000).toDF("j")).toDF("k", "j"))
+
+  test("a counted leaf carries its count; an uncounted one keeps the cap") {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+             "spark.sql.defaultSizeInBytes" -> "4096") {
+      val leaf = uncounted()
+      assert(stats(leaf).rowCount.isEmpty)
+      assert(stats(leaf).sizeInBytes == 4096)
+      val c = StateLeaf.counted(leaf, 1000000L)
+      assert(stats(c).rowCount.contains(BigInt(1000000)))
+      assert(stats(c).sizeInBytes > 4096) // the count, not the cap
+      // a view over the counted leaf still reads the same rows
+      assert(BatchedLeaf.rowsOf(c) eq BatchedLeaf.rowsOf(leaf))
+    }
+    val s = spark
+    import s.implicits._
+    val eager = StateLeaf.eagerLeaf(mkData(40).toDS().repartition(3))
+    assert(stats(eager).rowCount.contains(BigInt(40)))
+    assert(stats(StateLeaf.sized(eager, 40)).rowCount.contains(BigInt(40)))
+  }
+
+  test("concat sums its counted parts and caps when a part is uncounted") {
+    val s = spark
+    import s.implicits._
+    val a = StateLeaf.counted(StateLeaf.lazyLeaf(mkData(3).toDS()), 3)
+    val b = StateLeaf.counted(StateLeaf.lazyLeaf(mkData(5).toDS()), 5)
+    val ab = StateLeaf.union(Seq(a, b))
+    assert(stats(ab).rowCount.contains(BigInt(8)))
+    assert(stats(ab).sizeInBytes == stats(a).sizeInBytes + stats(b).sizeInBytes)
+    assert(ab.count() == 8)
+    val c = StateLeaf.lazyLeaf(mkData(2).toDS().filter(col("id") >= 0))
+    val abc = StateLeaf.union(Seq(a, b, c))
+    assert(stats(abc).rowCount.isEmpty)
+    assert(abc.count() == 10)
+  }
+
+  test("a small counted leaf is broadcast into its join with an uncounted " +
+       "plan; a counted leaf above the broadcast threshold is not") {
+    def plan(small: Long): SparkPlan = {
+      val big = uncounted()
+      val side = StateLeaf.counted(
+        StateLeaf.lazyLeaf(spark.range(1000).toDF("k")), small)
+      big.join(side, "k").queryExecution.executedPlan
+    }
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val p = plan(1000)
+      assert(p.collect { case j: BroadcastHashJoinExec => j }.size == 1, p)
+      val bhj = p.collect { case j: BroadcastHashJoinExec => j }.head
+      val bigSide = bhj.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildRight => bhj.left
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft  => bhj.right
+      }
+      assert(bigSide.collect { case e: Exchange => e }.isEmpty, p)
+      // 10^8 counted rows are far above the 10 MB threshold
+      val q = plan(100000000L)
+      assert(q.collect { case j: BroadcastHashJoinExec => j }.isEmpty, q)
+    }
+  }
+
+  test("the counting job's bloom batch equals buildBloom over its keys") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val family = new SeenFilter.SeenBloom(epochCapacity = 1 << 16)
+    val keys = (0 until 3000).map(i => f"${i * 7919}%032x")
+    val leaf = StateLeaf.lazyLeaf(keys.map(k => (k, k.length)).toDS()
+      .toDF("url_hash", "n").repartition(3))
+    val other = StateLeaf.lazyLeaf(mkData(20).toDS())
+    val expected = SeenFilter.buildBloom(keys.toDS(), family)
+    // over the row RDDs (a store-less driver) and through a bucket
+    // projection (a driver with a store)
+    for (bucket <- Seq(None, Some(lit(0)))) {
+      val (counts, batch) = StateLeaf.count(
+        Seq(other -> None, leaf -> bucket), Some(leaf -> family.batchFactory))
+      assert(counts.map(_._1) == Seq(20L, 3000L))
+      assert(counts(1)._2 == bucket.fold(Set.empty[Int])(_ => Set(0)))
+      assert(batch.contains(expected))
+    }
+    // a bloom leaf with no rows gives an empty batch
+    val empty = StateLeaf.lazyLeaf(leaf.filter(col("n") < 0))
+    val (_, none) = StateLeaf.count(Seq(empty -> None),
+      Some(empty -> family.batchFactory))
+    assert(none.contains(family.emptyBatch()))
   }
 }
